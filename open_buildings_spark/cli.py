@@ -468,26 +468,32 @@ def cmd_mixture(args) -> None:
         weights[k] = frac
     spark = get_spark(app_name="ob-mixture")
     df = spark.read.parquet(args.src)
-    # a weighted source with no rows binds the whole mix to zero — a typo
-    # in --weights must fail loudly, not ship an empty training mix
-    # compare as strings: CLI weight keys are always strings, so a
-    # non-string strata column must be normalized or every weight looks
-    # missing and valid invocations die with a misleading error
-    present = {
-        r["_s"]
+    # CLI weight keys are always strings: map each to the strata column's
+    # NATIVE value (via Spark's own string cast) so a non-string column
+    # (e.g. int source ids) reaches mixture_sample with matching keys. A
+    # weighted source with no rows binds the whole mix to zero — a typo in
+    # --weights must fail loudly, not ship an empty training mix
+    native = {
+        r["_s"]: r["_v"]
         for r in df.select(
-            F.col(args.strata_col).cast("string").alias("_s")
+            F.col(args.strata_col).alias("_v"),
+            F.col(args.strata_col).cast("string").alias("_s"),
         )
         .distinct()
         .collect()
     }
-    missing = sorted(set(weights) - present)
+    missing = sorted(set(weights) - set(native))
     if missing:
         raise SystemExit(
             f"--weights names source(s) with no rows: {missing}; "
-            f"available: {sorted(present)[:20]}"
+            f"available: {sorted(native)[:20]}"
         )
-    out = mixture_sample(df, weights, strata_col=args.strata_col, id_col=args.id_col)
+    out = mixture_sample(
+        df,
+        {native[k]: w for k, w in weights.items()},
+        strata_col=args.strata_col,
+        id_col=args.id_col,
+    )
     out.write.mode("overwrite").parquet(args.dst)
     n = spark.read.parquet(args.dst).count()
     print(f"mixture of {n} rows written to {args.dst}")

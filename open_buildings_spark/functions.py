@@ -28,11 +28,6 @@ def quadkey_prefix_filter(qk: Column, prefix: str) -> Column:
     return qk.startswith(prefix)
 
 
-def cell_at(qk: Column, level: int) -> Column:
-    """SUBSTR(quadkey, 1, level) — hierarchical parent cell."""
-    return F.substring(qk, 1, level)
-
-
 def quadkey_from_tiles_col(tx: Column, ty: Column, zoom: int) -> Column:
     """Quadkey string from integer tile columns at ``zoom`` — pure JVM bit
     interleave (one digit per level, MSB first), whole-stage-codegen'd."""

@@ -391,8 +391,10 @@ def rings_rect(rings: list[tuple[np.ndarray, bool]]):
     x, y = c[:4, 0], c[:4, 1]
     w, e, s, n = x.min(), x.max(), y.min(), y.max()
     corner = bool(np.all(((x == w) | (x == e)) & ((y == s) | (y == n))))
+    # four DISTINCT corners: a zero-area ring can visit only three
+    distinct = len(set(zip((x == e).tolist(), (y == n).tolist()))) == 4
     onemove = bool(np.all((c[1:, 0] != c[:4, 0]) ^ (c[1:, 1] != c[:4, 1])))
-    if corner and onemove and w < e and s < n:
+    if corner and distinct and onemove and w < e and s < n:
         return float(w), float(s), float(e), float(n)
     return None
 

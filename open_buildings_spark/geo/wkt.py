@@ -62,44 +62,6 @@ def _floats(text: str) -> np.ndarray:
         return np.fromstring(text.replace(",", " "), dtype=np.float64, sep=" ")
 
 
-def _floats_bulk(text: str, expected: int) -> np.ndarray | None:
-    """Parse a big "x y, x y, ..." blob. pyarrow's CSV float parser is ~2.5x
-    faster than np.fromstring and bit-identical; single-threaded on purpose
-    (this runs inside a Spark python worker — spawning a thread pool per
-    batch would oversubscribe the executor). Falls back to the numpy parser;
-    returns None when NEITHER parser yields exactly ``expected`` finite
-    floats — the caller must then reroute row-by-row, because a short/long
-    result reshaped against precomputed offsets would silently shift every
-    later row's coordinates."""
-    import io
-
-    import pyarrow as pa
-    import pyarrow.csv as pacsv
-
-    try:
-        csv = text.replace(", ", "\n").replace(",", "\n")
-        t = pacsv.read_csv(
-            io.BytesIO(csv.encode()),
-            read_options=pacsv.ReadOptions(use_threads=False, column_names=["x", "y"]),
-            parse_options=pacsv.ParseOptions(delimiter=" "),
-            convert_options=pacsv.ConvertOptions(
-                column_types={"x": pa.float64(), "y": pa.float64()}
-            ),
-        )
-        out = np.column_stack(
-            [t.column("x").to_numpy(zero_copy_only=False),
-             t.column("y").to_numpy(zero_copy_only=False)]
-        ).ravel()
-        if len(out) == expected and not np.isnan(out).any():
-            return out
-    except Exception:
-        pass
-    out = _floats(text)
-    if len(out) == expected and not np.isnan(out).any():
-        return out
-    return None
-
-
 def _parse_one(wkt: str, g: int, rings: list, ring_geom: list, ring_hole: list) -> int:
     """General parser for one WKT string; appends rings; returns gtype."""
     s = wkt.strip()

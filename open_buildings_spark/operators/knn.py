@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import haversine_m
@@ -29,15 +29,14 @@ _M_PER_DEG_LAT = 110574.0
 _M_PER_DEG_LON_EQ = 111000.0
 
 
-def corpus_anchor_offset_m(buildings: DataFrame) -> float:
-    """Upper bound (meters) on dist(quadkey anchor, ranked point) over the
-    corpus — the safety margin kNN ring growth needs for exactness on
-    footprints whose centroid differs from their bbox midpoint.
-
-    One native aggregate, no Python:
+def anchor_offset_expr(columns) -> Column:
+    """Per-row upper bound (meters) on dist(quadkey anchor, ranked point),
+    as one native expression over a frame with these ``columns`` — its
+    ``max`` is :func:`corpus_anchor_offset_m`, and the table layer folds the
+    same ``max`` into the aggregates it already runs over a write batch.
 
     - **tight** when bbox columns are stored (``minx..maxy`` + lon/lat):
-      max haversine(bbox midpoint, centroid) — the exact quantity;
+      haversine(bbox midpoint, centroid) — the exact quantity;
     - **conservative** otherwise (quadkey + lon/lat): the anchor lies
       inside tile(quadkey) by construction, so per row
       dist(anchor, centroid) <= max corner distance of that tile from the
@@ -47,16 +46,14 @@ def corpus_anchor_offset_m(buildings: DataFrame) -> float:
       corpora this still reports ~a tile diagonal — at z12 a few km, far
       below any ring margin, so it never costs a growth iteration.
     """
-    cols = set(buildings.columns)
+    cols = set(columns)
     if {"minx", "miny", "maxx", "maxy", "lon", "lat"} <= cols:
-        d = haversine_m(
+        return haversine_m(
             (F.col("minx") + F.col("maxx")) / 2.0,
             (F.col("miny") + F.col("maxy")) / 2.0,
             F.col("lon"),
             F.col("lat"),
         )
-        row = buildings.agg(F.max(d).alias("m")).collect()[0]
-        return float(row["m"] or 0.0)
     if {"quadkey", "lon", "lat"} <= cols:
         z2 = float(1 << ZOOM)
         tx = F.conv(F.translate(F.col("quadkey"), "0123", "0101"), 2, 10).cast("long")
@@ -66,19 +63,26 @@ def corpus_anchor_offset_m(buildings: DataFrame) -> float:
         pi = float(math.pi)
         north = F.degrees(F.atan(F.sinh(pi * (1.0 - 2.0 * ty / z2))))
         south = F.degrees(F.atan(F.sinh(pi * (1.0 - 2.0 * (ty + 1) / z2))))
-        d = F.greatest(
+        return F.greatest(
             *[
                 haversine_m(cx, cy, F.col("lon"), F.col("lat"))
                 for cx in (west, east)
                 for cy in (south, north)
             ]
-        )
-        row = buildings.agg(F.max(d).alias("m")).collect()[0]
-        return float(row["m"] or 0.0) * 1.05
+        ) * 1.05
     raise ValueError(
         "anchor_offset_m='auto' needs (minx,miny,maxx,maxy,lon,lat) or "
         "(quadkey,lon,lat) columns to bound the anchor-centroid offset"
     )
+
+
+def corpus_anchor_offset_m(buildings: DataFrame) -> float:
+    """Upper bound (meters) on dist(quadkey anchor, ranked point) over the
+    corpus — the safety margin kNN ring growth needs for exactness on
+    footprints whose centroid differs from their bbox midpoint. One native
+    aggregate of :func:`anchor_offset_expr`, no Python."""
+    row = buildings.agg(F.max(anchor_offset_expr(buildings.columns))).collect()[0]
+    return float(row[0] or 0.0)
 
 
 def _ring_cells(qlon: float, qlat: float, ring: int) -> list[str]:

@@ -28,6 +28,12 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    StringType,
+    StructField,
+    StructType,
+    _parse_datatype_string,
+)
 
 
 def _meta_dir(root: str) -> str:
@@ -48,8 +54,9 @@ def current_manifest(root: str) -> dict | None:
         return json.load(f)
 
 
-def _commit_manifest(root: str, manifest: dict) -> None:
-    """Atomic: temp-write manifest, rename, then swap the VERSION pointer."""
+def _commit_manifest(root: str, manifest: dict) -> dict:
+    """Atomic: temp-write manifest, rename, then swap the VERSION pointer.
+    Returns the committed manifest."""
     os.makedirs(_meta_dir(root), exist_ok=True)
     name = f"v{manifest['snapshot_id']}.json"
     tmp = os.path.join(_meta_dir(root), f".{name}.tmp")
@@ -60,6 +67,7 @@ def _commit_manifest(root: str, manifest: dict) -> None:
     with open(vtmp, "w") as f:
         f.write(name)
     os.replace(vtmp, _version_file(root))
+    return manifest
 
 
 def committed_cells(root: str, keys: list[str] | None = None) -> set:
@@ -135,16 +143,12 @@ def _rows_per_file(
 
 
 def _keyed_reader(spark: SparkSession, m: dict, keys: list[str], root: str):
-    """Reader for a KEYED table's files: explicit schema with the key
-    columns (and ``cell``) as strings plus ``basePath``, so Spark recovers
-    the hive-directory values verbatim — inference would coerce '0300' to
-    the integer 300. Caller must ``.drop('cell')``."""
+    """Reader for a table's files that recovers the hive-directory values
+    verbatim — the key columns (if any) and ``cell`` — from an explicit
+    schema with them as strings plus ``basePath`` (inference would coerce
+    '0300' to the integer 300). Table reads ``.drop('cell')``."""
     if not m.get("schema"):
-        raise ValueError(
-            f"keyed table at {root} has no stored schema; rewrite it"
-        )
-    from pyspark.sql.types import StringType, StructField, StructType
-
+        raise ValueError(f"table at {root} has no stored schema; rewrite it")
     fields = [
         f for f in _schema_struct(m).fields if f.name not in keys
     ] + [StructField(k, StringType(), True) for k in keys] + [
@@ -201,7 +205,7 @@ def write_partitioned(
     ``last_append_batch_id`` — atomically with the data becoming visible.
     Returns the final manifest.
     """
-    from ..operators.partition import partition_plan
+    from ..operators.partition import partition_plan, tag_cells
 
     keys = keys or []
     if keys:
@@ -244,11 +248,11 @@ def write_partitioned(
     commits = 0
     # per-snapshot schema (data files only: partition key columns and the
     # cell live in directory names) — the schema-evolution anchor
-    data_schema = [
-        f.jsonValue() for f in df.schema.fields if f.name not in keys
-    ]
-    from ..operators.partition import tag_cells
-
+    m = {
+        **m,
+        "keys": keys,
+        "schema": [f.jsonValue() for f in df.schema.fields if f.name not in keys],
+    }
     spark = df.sparkSession
     plan_schema = _plan_schema(keys, ", n_rows long")
     for group in groups:
@@ -285,13 +289,9 @@ def write_partitioned(
         # KILLED (uncommitted) attempt are never referenced — they sit
         # orphaned until expire_snapshots reclaims them, and every older
         # snapshot keeps reading exactly the files it committed.
-        pre_files: dict[str, set] = {}
-        for r in group:
-            part_dir = data_dir
-            for k in keys:
-                part_dir = os.path.join(part_dir, f"{k}={r[k]}")
-            part_dir = os.path.join(part_dir, f"cell={r['cell']}")
-            pre_files[part_dir] = set(glob.glob(os.path.join(part_dir, "*.parquet")))
+        pre_files = _list_cells(
+            data_dir, keys, [tuple(r[k] for k in keys) + (r["cell"],) for r in group]
+        )
         # explicit partition count: ceil(rows/max_per_file) writer tasks at
         # minimum — an explicit repartition(n, ...) is exempt from AQE
         # partition coalescing, which would otherwise merge the salt shards
@@ -320,41 +320,14 @@ def write_partitioned(
             .option("compression", "snappy")
             .parquet(data_dir)
         )
-        group_files: list[list[str]] = []
-        for r in group:
-            part_dir = data_dir
-            for k in keys:
-                part_dir = os.path.join(part_dir, f"{k}={r[k]}")
-            part_dir = os.path.join(part_dir, f"cell={r['cell']}")
-            group_files.append(
-                sorted(
-                    set(glob.glob(os.path.join(part_dir, "*.parquet")))
-                    - pre_files[part_dir]
-                )
-            )
-        # one batched footer pass for the whole commit group (fans out as
-        # a Spark job when the group wrote many files)
-        flat = [p for fl in group_files for p in fl]
-        flat_rows = iter(_rows_per_file(flat, spark))
-        new_parts = []
-        for r, files in zip(group, group_files):
-            new_parts.append(
-                {
-                    "cell": r["cell"],
-                    "values": {k: r[k] for k in keys},
-                    "n_rows": r["n_rows"],
-                    "files": [os.path.relpath(p, root) for p in files],
-                    "file_rows": [next(flat_rows) for _ in files],
-                }
-            )
         is_final_group = group is groups[-1]
-        m = {
-            "snapshot_id": m["snapshot_id"] + 1,
-            "parent_id": m["snapshot_id"],
-            "keys": keys,
-            "schema": data_schema,
-            "partitions": m["partitions"] + new_parts,
-            "metrics": {
+        m = _next_snapshot(
+            spark,
+            root,
+            m,
+            pre_files,
+            rewrite=set(),
+            metrics={
                 **m["metrics"],
                 "rows_written": m["metrics"]["rows_written"]
                 + sum(r["n_rows"] for r in group),
@@ -364,7 +337,7 @@ def write_partitioned(
                 # carry caller bookkeeping that marks it complete
                 **(extra_metrics if is_final_group and extra_metrics else {}),
             },
-        }
+        )
         if is_final_group and store_anchor_offset:
             data_cols = set(df.columns) - set(keys) - {"cell"}
             files = [
@@ -389,6 +362,199 @@ def write_partitioned(
     return m
 
 
+def _table_cap(m: dict, max_per_file: int | None) -> int | None:
+    """Per-file row cap of a rewrite: the caller's, else the table's."""
+    if max_per_file is not None:
+        return max_per_file
+    return m["metrics"].get("max_per_file")
+
+
+def _list_cells(data_dir: str, keys: list[str], cks) -> dict[tuple, set]:
+    """{(key values..., cell): set of parquet files in its directory}."""
+    return {
+        ck: set(
+            glob.glob(
+                os.path.join(
+                    _part_dir(data_dir, keys, dict(zip(keys, ck)), ck[-1]),
+                    "*.parquet",
+                )
+            )
+        )
+        for ck in cks
+    }
+
+
+def _next_snapshot(
+    spark: SparkSession,
+    root: str,
+    m: dict,
+    pre_files: dict[tuple, set],
+    rewrite: set,
+    metrics: dict,
+    anchor: float | None = None,
+) -> dict:
+    """The snapshot after a write into the cells of ``pre_files`` (each
+    touched (key values..., cell) -> the files its directory held before
+    the write) — the one commit path of every cell write.
+
+    The files each cell gained are listed once and their footers read in
+    one batched pass (a Spark job past :func:`_rows_per_file`'s threshold,
+    never per-cell serial reads), so ``n_rows`` and ``file_rows`` of every
+    touched cell come from the footers — no recount of the written data.
+    Cells in ``rewrite`` are copy-on-write: their new files REPLACE the
+    prior ones (a cell left without rows drops out); other cells keep their
+    files and gain the new ones (a pre-r4 manifest's missing ``file_rows``
+    are backfilled from the footers, bounded by the touched cells).
+    ``anchor`` — the written rows' max anchor offset from the caller's own
+    aggregate — keeps the kNN exactness bound ``max_anchor_offset_m``
+    current where the table tracks it, with no second scan of the new
+    files. Partitions come back sorted by (key values, cell)."""
+    keys = _manifest_keys(m)
+    data_dir = os.path.join(root, "data")
+    prior = {_part_key(p, keys): p for p in m["partitions"]}
+    post = _list_cells(data_dir, keys, pre_files)
+    new = {ck: sorted(post[ck] - pre_files[ck]) for ck in pre_files}
+    backfill = {
+        ck: [os.path.join(root, f) for f in prior[ck]["files"]]
+        for ck in new
+        if ck in prior and ck not in rewrite and prior[ck].get("file_rows") is None
+    }
+    flat = [p for fl in new.values() for p in fl]
+    flat += [p for fl in backfill.values() for p in fl]
+    it = iter(_rows_per_file(flat, spark))
+    new_rows = {ck: [next(it) for _ in fl] for ck, fl in new.items()}
+    bf_rows = {ck: [next(it) for _ in fl] for ck, fl in backfill.items()}
+    parts = [p for ck, p in prior.items() if ck not in new]
+    for ck, files in new.items():
+        if ck in prior and ck not in rewrite:
+            part = dict(prior[ck])
+            part["file_rows"] = bf_rows.get(ck, part.get("file_rows"))
+        else:
+            part = {"cell": ck[-1], "values": dict(zip(keys, ck))}
+            part["files"], part["file_rows"] = [], []
+        part["files"] = part["files"] + [os.path.relpath(f, root) for f in files]
+        part["file_rows"] = part["file_rows"] + new_rows[ck]
+        part["n_rows"] = sum(part["file_rows"])
+        if part["files"]:
+            parts.append(part)
+    parts.sort(key=lambda p: _part_key(p, keys))
+    metrics = dict(metrics)
+    tracked = m["metrics"].get("max_anchor_offset_m")
+    if anchor is not None and tracked is not None and any(new.values()):
+        metrics["max_anchor_offset_m"] = max(tracked, anchor)
+    return {
+        **{k: v for k, v in m.items() if k in ("schema", "keys")},
+        "snapshot_id": m["snapshot_id"] + 1,
+        "parent_id": m["snapshot_id"],
+        "partitions": parts,
+        "metrics": metrics,
+    }
+
+
+def _broadcast_rows(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """Broadcast frame of driver-side rows. Built from pandas, it plans as
+    a local relation: broadcasting it costs a fraction of a frame made
+    from a row list, which Spark materializes as a parallelized RDD job."""
+    import pandas as pd
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    return F.broadcast(
+        spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
+    )
+
+
+def _check_batch(df: DataFrame, m: dict, keys: list[str], what: str) -> None:
+    """A write batch may carry only the table's columns and must carry its
+    partition key columns, string-typed."""
+    if m.get("schema"):
+        allowed = {f["name"] for f in m["schema"]} | set(keys)
+        extra = set(df.columns) - allowed
+        if extra:
+            raise ValueError(
+                f"{what} columns {sorted(extra)} not in table schema; "
+                f"add_column first"
+            )
+    missing = set(keys) - set(df.columns)
+    if missing:
+        raise ValueError(
+            f"{what} batch missing partition key columns {sorted(missing)}"
+        )
+    if keys:
+        _check_key_types(df, keys)
+
+
+def _route_batch(df: DataFrame, m: dict, merge_key: str | None = None) -> dict:
+    """Validate, route and count a write batch with ONE native aggregate,
+    grouped by (partition keys, z12 quadkey): row counts, the max anchor
+    offset (:func:`..operators.knn.anchor_offset_expr`, only when the table
+    tracks ``max_anchor_offset_m``) and, for a MERGE, the batch's
+    ``merge_key`` values.
+
+    The driver routes each group to its manifest leaf by longest prefix —
+    leaves are prefix-disjoint per key group, so at most one matches — and
+    a group outside every leaf (new geography, or a never-seen key value)
+    opens its z12 quadkey as a new leaf; z12 cells are never proper
+    prefixes of leaves, so the leaves stay prefix-disjoint. Rows are tagged
+    with their cell by a broadcast equi-join on that (keys, z12) -> cell
+    table, whose size is the batch's group count, never the table's.
+
+    Returns ``tagged`` (the batch plus ``cell``), ``counts`` per
+    (key values..., cell), ``unroutable`` (rows with a NULL quadkey or
+    partition key, which the inner tagging join would drop), ``anchor``,
+    and for a MERGE ``keys`` (non-NULL key values) and ``duplicates``."""
+    from ..operators.partition import MAX_LEVEL
+
+    keys = _manifest_keys(m)
+    aggs = [F.count("*").alias("_n")]
+    track = "max_anchor_offset_m" in m["metrics"]
+    if track:
+        from ..operators.knn import anchor_offset_expr
+
+        aggs.append(F.max(anchor_offset_expr(df.columns)).alias("_off"))
+    if merge_key:
+        aggs += [
+            F.collect_list(merge_key).alias("_keys"),
+            F.count(merge_key).alias("_nk"),
+        ]
+    qk12 = F.substring("quadkey", 1, MAX_LEVEL)
+    groups = df.groupBy(*keys, qk12.alias("_qk12")).agg(*aggs).collect()
+    leaves: dict[tuple, set] = {}
+    for p in m["partitions"]:
+        leaves.setdefault(_part_key(p, keys)[:-1], set()).add(p["cell"])
+    route, counts, unroutable = [], {}, 0
+    for g in groups:
+        kv, qk = tuple(g[k] for k in keys), g["_qk12"]
+        if qk is None or None in kv:
+            unroutable += g["_n"]
+            continue
+        cells = leaves.get(kv, set())
+        cell = next(
+            (qk[:n] for n in range(len(qk), 0, -1) if qk[:n] in cells), qk
+        )
+        route.append((*kv, qk, cell))
+        counts[(*kv, cell)] = counts.get((*kv, cell), 0) + g["_n"]
+    route_df = _broadcast_rows(
+        df.sparkSession, route, _plan_schema([*keys, "_qk12"])
+    )
+    out = {
+        "tagged": df.withColumn("_qk12", qk12)
+        .join(route_df, [*keys, "_qk12"])
+        .drop("_qk12"),
+        "counts": counts,
+        "unroutable": unroutable,
+        "anchor": (
+            max((g["_off"] or 0.0 for g in groups), default=0.0) if track else None
+        ),
+    }
+    if merge_key:
+        batch_keys = [k for g in groups for k in g["_keys"]]
+        n_null = sum(g["_n"] - g["_nk"] for g in groups)
+        out["keys"] = batch_keys
+        out["duplicates"] = len(set(batch_keys)) < len(batch_keys) or n_null > 1
+    return out
+
+
 def append_rows(
     df: DataFrame,
     root: str,
@@ -402,12 +568,9 @@ def append_rows(
     dropping late rows that land in them; appends instead ROUTE every row:
 
     - rows covered by an existing leaf cell append files to that cell
-      (longest-prefix routing via the same broadcast hash equi-join as
-      ``tag_cells`` — plan size O(1) in cell count);
+      (longest-prefix routing on the driver from the manifest);
     - rows outside every existing leaf (new geography) open their z12
-      quadkey as a new leaf cell. z12 cells are never proper prefixes of
-      leaves, so the routing plan stays prefix-disjoint and each row
-      matches exactly one entry.
+      quadkey as a new leaf cell (see :func:`_route_batch`).
 
     Keyed (hive ``country_iso=XX``-style) tables route per key group: the
     batch must carry the partition key columns, and (key values, cell)
@@ -417,8 +580,8 @@ def append_rows(
 
     Every batch row MUST route: rows whose quadkey is NULL (or whose key
     columns are NULL) would silently vanish through the inner routing
-    join, so the batch count is compared with the routed count and a
-    mismatch raises (mirrors ``upsert_rows``'s guard).
+    join, so they are counted in the routing aggregate and any raises
+    (mirrors ``upsert_rows``'s guard).
 
     Snapshot immutability holds: files are only ever ADDED (job-unique part
     names, pre/post directory diff per touched cell), the manifest diff is
@@ -432,9 +595,14 @@ def append_rows(
     lagged its table commit re-delivers the batch and this no-ops. A
     mid-append crash leaves only unreferenced files (expire_snapshots
     reclaims them) and the replay re-appends cleanly.
-    """
-    from ..operators.partition import tag_cells
 
+    Scale shape: one aggregate over the batch validates it, routes it and
+    counts it (collected at one row per (keys, z12) group); the write is
+    one salted shuffle; the commit reads the new files' footers (no second
+    scan: ``n_rows``, ``file_rows`` and the anchor-offset bound come from
+    the footers and the aggregate). 5 Spark jobs per call, plus one when a
+    cell is over the row cap, whatever the table's cell count.
+    """
     m = current_manifest(root)
     if m is None:
         raise FileNotFoundError(f"no committed snapshot at {root}")
@@ -442,117 +610,31 @@ def append_rows(
     last = m["metrics"].get("last_append_batch_id")
     if batch_id is not None and last is not None and batch_id <= last:
         return m  # replayed micro-batch: already committed
-    if m.get("schema"):
-        allowed = {f["name"] for f in m["schema"]} | set(keys)
-        extra = set(df.columns) - allowed
-        if extra:
-            raise ValueError(
-                f"append columns {sorted(extra)} not in table schema; "
-                f"add_column first"
-            )
-    missing = set(keys) - set(df.columns)
-    if missing:
+    _check_batch(df, m, keys, "append")
+    r = _route_batch(df, m)
+    counts = r["counts"]
+    if r["unroutable"]:
         raise ValueError(
-            f"append batch missing partition key columns {sorted(missing)}"
+            f"{r['unroutable']} append rows have a NULL "
+            "or un-routable quadkey or partition key; refusing (the "
+            "inner routing join would silently drop them)"
         )
-    if keys:
-        _check_key_types(df, keys)
-    cap = (
-        max_per_file
-        if max_per_file is not None
-        else m.get("metrics", {}).get("max_per_file")
-    )
-    spark = df.sparkSession
+    if not counts:
+        if batch_id is None:
+            return m
+        return _commit_manifest(
+            root,
+            _next_snapshot(
+                df.sparkSession, root, m, {}, set(),
+                {**m["metrics"], "last_append_batch_id": batch_id},
+            ),
+        )
     data_dir = os.path.join(root, "data")
-
-    _, plan = _routing_plan(spark, m, df, keys)
-    tagged = tag_cells(df, plan, keys).persist()
-    try:
-        n_batch = df.count()
-        counts = {
-            tuple(r[k] for k in keys) + (r["cell"],): r["n"]
-            for r in tagged.groupBy(*keys, "cell")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        if sum(counts.values()) != n_batch:
-            raise ValueError(
-                f"{n_batch - sum(counts.values())} append rows have a NULL "
-                "or un-routable quadkey or partition key; refusing (the "
-                "inner routing join would silently drop them)"
-            )
-        if not counts:
-            if batch_id is None:
-                return m
-            m2 = {
-                **m,
-                "snapshot_id": m["snapshot_id"] + 1,
-                "parent_id": m["snapshot_id"],
-                "metrics": {**m["metrics"], "last_append_batch_id": batch_id},
-            }
-            _commit_manifest(root, m2)
-            return m2
-        pre_files = {
-            ck: set(
-                glob.glob(
-                    os.path.join(
-                        _part_dir(data_dir, keys, dict(zip(keys, ck)), ck[-1]),
-                        "*.parquet",
-                    )
-                )
-            )
-            for ck in counts
-        }
-        _write_cells_salted(tagged, counts, cap, data_dir, keys)
-    finally:
-        tagged.unpersist()
-    by_ck = {_part_key(p, keys): p for p in m["partitions"]}
-    parts = [dict(p) for p in m["partitions"]]
-    appended_files: list[str] = []
-    # one BATCHED footer pass for the whole commit (fans out as a Spark
-    # job past the threshold) — per-cell serial driver reads would stall
-    # a wide append exactly the way _rows_per_file's docstring warns
-    new_files: dict[tuple, list[str]] = {}
-    backfill: dict[tuple, list[str]] = {}
-    for ck in counts:
-        pdir = _part_dir(data_dir, keys, dict(zip(keys, ck)), ck[-1])
-        new_files[ck] = sorted(
-            set(glob.glob(os.path.join(pdir, "*.parquet"))) - pre_files[ck]
-        )
-        if ck in by_ck and by_ck[ck].get("file_rows") is None:
-            # opportunistic backfill for pre-r4 manifests, bounded by the
-            # files of the cells this batch touches
-            backfill[ck] = [os.path.join(root, f) for f in by_ck[ck]["files"]]
-    flat = [p for ck in counts for p in new_files[ck]] + [
-        p for fl in backfill.values() for p in fl
-    ]
-    it = iter(_rows_per_file(flat, spark))
-    frows_by = {ck: [next(it) for _ in new_files[ck]] for ck in counts}
-    bf_by = {ck: [next(it) for _ in fl] for ck, fl in backfill.items()}
-    for ck, n in counts.items():
-        files = new_files[ck]
-        rel = [os.path.relpath(p, root) for p in files]
-        frows = frows_by[ck]
-        appended_files.extend(os.path.join(root, f) for f in rel)
-        if ck in by_ck:
-            tgt = next(p for p in parts if _part_key(p, keys) == ck)
-            old_fr = tgt.get("file_rows")
-            if old_fr is None:
-                old_fr = bf_by[ck]
-            tgt["files"] = tgt["files"] + rel
-            tgt["file_rows"] = old_fr + frows
-            tgt["n_rows"] = tgt["n_rows"] + n
-        else:
-            parts.append(
-                {
-                    "cell": ck[-1],
-                    "values": dict(zip(keys, ck)),
-                    "n_rows": n,
-                    "files": rel,
-                    "file_rows": frows,
-                }
-            )
-    metrics2 = {
+    pre_files = _list_cells(data_dir, keys, counts)
+    _write_cells_salted(
+        r["tagged"], counts, _table_cap(m, max_per_file), data_dir, keys
+    )
+    metrics = {
         **m["metrics"],
         "rows_written": m["metrics"]["rows_written"] + sum(counts.values()),
         # a manual append (batch_id=None) must NOT reset the streaming
@@ -561,24 +643,12 @@ def append_rows(
         "last_append_batch_id": batch_id if batch_id is not None else last,
         "appended_batches": m["metrics"].get("appended_batches", 0) + 1,
     }
-    # keep the kNN exactness bound current: max with the appended files'
-    # own offset (one column-pruned scan of JUST the new files)
-    if "max_anchor_offset_m" in m["metrics"] and appended_files:
-        from ..operators.knn import corpus_anchor_offset_m
-
-        metrics2["max_anchor_offset_m"] = max(
-            m["metrics"]["max_anchor_offset_m"],
-            corpus_anchor_offset_m(spark.read.parquet(*appended_files)),
-        )
-    m2 = {
-        **{k: v for k, v in m.items() if k in ("schema", "keys")},
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent_id": m["snapshot_id"],
-        "partitions": parts,
-        "metrics": metrics2,
-    }
-    _commit_manifest(root, m2)
-    return m2
+    return _commit_manifest(
+        root,
+        _next_snapshot(
+            df.sparkSession, root, m, pre_files, set(), metrics, r["anchor"]
+        ),
+    )
 
 
 def _plan_schema(keys: list[str], extra: str = "") -> str:
@@ -609,8 +679,8 @@ def _write_cells_salted(
     if cap:
         over = [(*ck, -(-n // cap)) for ck, n in counts.items() if n > cap]
         if over:
-            shards_df = F.broadcast(
-                spark.createDataFrame(over, _plan_schema(keys, ", _shards int"))
+            shards_df = _broadcast_rows(
+                spark, over, _plan_schema(keys, ", _shards int")
             )
             df = (
                 df.join(shards_df, on, "left")
@@ -641,45 +711,28 @@ def _write_cells_salted(
     )
 
 
-def _routing_plan(
-    spark: SparkSession, m: dict, df: DataFrame, keys: list[str] | None = None
-):
-    """(existing-cells df, routing plan df) for a batch of rows: existing
-    (key values, leaf) partitions plus a new z12 leaf for every batch
-    (key values, quadkey) outside all of them (z12 cells are never proper
-    prefixes of leaves, so the plan stays prefix-disjoint per key group and
-    every row matches exactly one entry). A never-seen key value opens its
-    own z12 leaves. Shared by :func:`append_rows` and :func:`upsert_rows`."""
-    from ..operators.partition import tag_cells
-
-    keys = keys or []
-    cells_df = spark.createDataFrame(
-        [_part_key(p, keys) for p in m["partitions"]], _plan_schema(keys)
-    )
-    batch12 = df.select(
-        *keys, F.substring("quadkey", 1, 12).alias("quadkey")
-    ).distinct()
-    covered = tag_cells(batch12, cells_df, keys).select(*keys, "quadkey")
-    new_cells = batch12.join(covered, [*keys, "quadkey"], "left_anti").select(
-        *keys, F.col("quadkey").alias("cell")
-    )
-    return cells_df, cells_df.unionByName(new_cells)
-
-
 def _read_partitions(
     spark: SparkSession, root: str, m: dict, parts: list[dict]
 ) -> DataFrame:
-    """Scan of exactly the given manifest partitions' files (keyed tables
-    recover their key columns from the directory names; ``cell`` is NOT
-    exposed — re-derive with ``tag_cells`` where needed)."""
+    """Scan of exactly the given manifest partitions' files, with the
+    partition key columns and ``cell`` recovered from the hive directory
+    names (:func:`_keyed_reader`) — the rows come back tagged with their
+    leaf cell, no re-routing."""
     files = [os.path.join(root, f) for p in parts for f in p["files"]]
-    keys = _manifest_keys(m)
-    if keys:
-        return _keyed_reader(spark, m, keys, root).parquet(*files).drop("cell")
-    reader = spark.read
-    if m.get("schema"):
-        reader = reader.schema(_schema_struct(m))
-    return reader.parquet(*files)
+    return _keyed_reader(spark, m, _manifest_keys(m), root).parquet(*files)
+
+
+def _in_cells(df: DataFrame, keys: list[str], cks) -> DataFrame:
+    """Rows of ``df`` (a :func:`_read_partitions` scan) in the given
+    (key values..., cell) partitions. The filter reads only directory
+    columns, so Spark applies it by pruning the file list the scan listed
+    when ``df`` was created — no second listing, no row scan outside."""
+    names = [*keys, "cell"]
+    return df.filter(
+        F.struct(*names).isin(
+            [F.struct(*[F.lit(v).alias(n) for n, v in zip(names, ck)]) for ck in cks]
+        )
+    )
 
 
 def upsert_rows(
@@ -711,199 +764,91 @@ def upsert_rows(
     a cell (a NULL/empty quadkey would otherwise delete the old version
     while the replacement vanishes).
 
-    Scale shape: the upsert batch is small relative to the table, so its
-    key set broadcasts; finding old versions is one manifest-planned scan
-    with a broadcast semi-join (at 10^12 rows the dominant cost, bounded by
-    a quadkey-prefix prune when the caller knows the affected geography);
-    the rewrite scan reads only the rewrite cells' files.
+    Scale shape: one aggregate over the batch validates it (duplicates,
+    unroutable rows), routes it and collects its key set, which is small
+    relative to the table and broadcasts; finding old versions is one
+    column-pruned scan of the table with a broadcast semi-join that
+    returns each replaced row's cell from its file's hive directory (at
+    10^12 rows the dominant cost); the rewrite reads only the rewrite
+    cells' files, pruned from the same listed scan. Survivor counts are
+    the manifest's ``n_rows`` minus the replaced rows, and the commit takes
+    ``n_rows``/``file_rows`` from the new files' footers — nothing is
+    recounted. 8 Spark jobs per call, plus one when a cell is over the row
+    cap and one to list a table of more than 32 files.
     """
-    from ..operators.partition import tag_cells
-
     m = current_manifest(root)
     if m is None:
         raise FileNotFoundError(f"no committed snapshot at {root}")
     part_keys = _manifest_keys(m)
-    if m.get("schema"):
-        allowed = {f["name"] for f in m["schema"]} | set(part_keys)
-        extra = set(df.columns) - allowed
-        if extra:
-            raise ValueError(
-                f"upsert columns {sorted(extra)} not in table schema; "
-                f"add_column first"
-            )
-    missing = set(part_keys) - set(df.columns)
-    if missing:
-        raise ValueError(
-            f"upsert batch missing partition key columns {sorted(missing)}"
-        )
-    if part_keys:
-        _check_key_types(df, part_keys)
-    cap = (
-        max_per_file
-        if max_per_file is not None
-        else m.get("metrics", {}).get("max_per_file")
-    )
+    _check_batch(df, m, part_keys, "upsert")
     spark = df.sparkSession
-    data_dir = os.path.join(root, "data")
-
-    cells_df, plan = _routing_plan(spark, m, df, part_keys)
-    tagged = tag_cells(df, plan, part_keys).persist()
-    try:
-        n_batch = df.count()
-        n_dup_keys = (
-            df.groupBy(key).count().filter(F.col("count") > 1).limit(1).count()
+    r = _route_batch(df, m, merge_key=key)
+    if r["duplicates"]:
+        raise ValueError(
+            f"upsert batch contains duplicate {key} values; a MERGE "
+            "source must be key-unique"
         )
-        if n_dup_keys:
-            raise ValueError(
-                f"upsert batch contains duplicate {key} values; a MERGE "
-                "source must be key-unique"
-            )
-        new_counts = {
-            tuple(r[k] for k in part_keys) + (r["cell"],): r["n"]
-            for r in tagged.groupBy(*part_keys, "cell")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        if sum(new_counts.values()) != n_batch:
-            raise ValueError(
-                f"{n_batch - sum(new_counts.values())} upsert rows have a "
-                "NULL or un-routable quadkey or partition key; refusing "
-                "(the old versions would be deleted with no replacement "
-                "written)"
-            )
-        keys_df = df.select(key).distinct()
-        # old versions can live under ANY partition (a row may change its
-        # partition key value — e.g. a doc moving country), so the rewrite
-        # set comes from a full manifest-planned scan with a broadcast
-        # semi-join on the merge key
-        old_all = tag_cells(read_table(spark, root), cells_df, part_keys)
-        rewrite = sorted(
-            tuple(r[k] for k in part_keys) + (r["cell"],)
-            for r in old_all.join(F.broadcast(keys_df), key, "left_semi")
-            .select(*part_keys, "cell")
-            .distinct()
-            .collect()
+    if r["unroutable"]:
+        raise ValueError(
+            f"{r['unroutable']} upsert rows have a "
+            "NULL or un-routable quadkey or partition key; refusing "
+            "(the old versions would be deleted with no replacement "
+            "written)"
         )
-        append_cells = sorted(set(new_counts) - set(rewrite))
-        affected = sorted(set(rewrite) | set(new_counts))
-        if not affected:
-            return m
-        if rewrite:
-            rw_set = set(rewrite)
-            rw_parts = [
-                p for p in m["partitions"] if _part_key(p, part_keys) in rw_set
-            ]
-            survivors = tag_cells(
-                _read_partitions(spark, root, m, rw_parts), cells_df, part_keys
-            ).join(F.broadcast(keys_df), key, "left_anti")
-            merged = survivors.unionByName(tagged.select(*survivors.columns))
-        else:
-            merged = tagged
-        merged = merged.persist()
-        counts = {
-            tuple(r[k] for k in part_keys) + (r["cell"],): r["n"]
-            for r in merged.groupBy(*part_keys, "cell")
-            .agg(F.count("*").alias("n"))
+    new_counts = r["counts"]
+    keys_df = _broadcast_rows(
+        spark,
+        [(k,) for k in r["keys"]],
+        StructType([StructField(key, df.schema[key].dataType)]),
+    )
+    # old versions can live under ANY partition (a row may change its
+    # partition key value — e.g. a doc moving country), so one
+    # column-pruned scan of the whole table, semi-joined to the broadcast
+    # key set, collects the (key values, cell) directory of each replaced
+    # row's file: one row per batch key in a key-unique table
+    replaced: dict[tuple, int] = {}
+    if r["keys"] and m["partitions"]:
+        table = _read_partitions(spark, root, m, m["partitions"])
+        for row in (
+            table.select(key, *part_keys, "cell")
+            .join(keys_df, key, "left_semi")
+            .drop(key)
             .collect()
-        }
-        pre_files = {
-            ck: set(
-                glob.glob(
-                    os.path.join(
-                        _part_dir(data_dir, part_keys, dict(zip(part_keys, ck)), ck[-1]),
-                        "*.parquet",
-                    )
-                )
-            )
-            for ck in affected
-        }
-        _write_cells_salted(merged, counts, cap, data_dir, part_keys)
-        merged.unpersist()
-    finally:
-        tagged.unpersist()
-    by_ck = {_part_key(p, part_keys): p for p in m["partitions"]}
-    aff_set = set(affected)
-    parts = [
-        dict(p) for p in m["partitions"] if _part_key(p, part_keys) not in aff_set
-    ]
-    new_file_paths: list[str] = []
-    # batched footer pass (see append_rows): never per-cell serial reads
-    post_by: dict[tuple, list[str]] = {}
-    backfill = {}
-    for ck in affected:
-        pdir = _part_dir(data_dir, part_keys, dict(zip(part_keys, ck)), ck[-1])
-        post_by[ck] = sorted(
-            set(glob.glob(os.path.join(pdir, "*.parquet"))) - pre_files[ck]
-        )
-        if (
-            ck in append_cells
-            and ck in by_ck
-            and by_ck[ck].get("file_rows") is None
         ):
-            backfill[ck] = [os.path.join(root, f) for f in by_ck[ck]["files"]]
-    flat = [p for ck in affected for p in post_by[ck]] + [
-        p for fl in backfill.values() for p in fl
-    ]
-    it = iter(_rows_per_file(flat, spark))
-    frows_by = {ck: [next(it) for _ in post_by[ck]] for ck in affected}
-    bf_by = {ck: [next(it) for _ in fl] for ck, fl in backfill.items()}
-    for ck in affected:
-        vals = dict(zip(part_keys, ck))
-        post = post_by[ck]
-        rel = [os.path.relpath(f, root) for f in post]
-        frows = frows_by[ck]
-        new_file_paths.extend(post)
-        if ck in append_cells and ck in by_ck:
-            prior = by_ck[ck]
-            old_fr = prior.get("file_rows")
-            if old_fr is None:
-                old_fr = bf_by[ck]
-            parts.append(
-                {
-                    **dict(prior),
-                    "files": prior["files"] + rel,
-                    "file_rows": old_fr + frows,
-                    "n_rows": prior["n_rows"] + counts.get(ck, 0),
-                }
-            )
-        else:
-            n = counts.get(ck, 0)
-            if n == 0:
-                continue  # every row of this cell moved or was replaced away
-            parts.append(
-                {
-                    "cell": ck[-1],
-                    "values": vals,
-                    "n_rows": n,
-                    "files": rel,
-                    "file_rows": frows,
-                }
-            )
-    parts.sort(key=lambda p: _part_key(p, part_keys))
-    metrics2 = {
+            replaced[tuple(row)] = replaced.get(tuple(row), 0) + 1
+    if not (replaced or new_counts):
+        return m
+    by_ck = {_part_key(p, part_keys): p for p in m["partitions"]}
+    counts = dict(new_counts)
+    for ck, n in replaced.items():
+        counts[ck] = counts.get(ck, 0) + by_ck[ck]["n_rows"] - n
+    merged = r["tagged"]
+    if replaced:
+        survivors = _in_cells(table, part_keys, replaced).join(
+            keys_df, key, "left_anti"
+        )
+        merged = survivors.unionByName(merged.select(*survivors.columns))
+    data_dir = os.path.join(root, "data")
+    pre_files = _list_cells(data_dir, part_keys, counts)
+    _write_cells_salted(
+        merged,
+        {ck: n for ck, n in counts.items() if n},
+        _table_cap(m, max_per_file),
+        data_dir,
+        part_keys,
+    )
+    metrics = {
         **m["metrics"],
         "upserted_batches": m["metrics"].get("upserted_batches", 0) + 1,
         "rows_upserted": m["metrics"].get("rows_upserted", 0)
         + sum(new_counts.values()),
     }
-    # keep the kNN exactness bound current, exactly as append_rows does:
-    # replacement geometry can raise the corpus anchor offset
-    if "max_anchor_offset_m" in m["metrics"] and new_file_paths:
-        from ..operators.knn import corpus_anchor_offset_m
-
-        metrics2["max_anchor_offset_m"] = max(
-            m["metrics"]["max_anchor_offset_m"],
-            corpus_anchor_offset_m(spark.read.parquet(*new_file_paths)),
-        )
-    m2 = {
-        **{k: v for k, v in m.items() if k in ("schema", "keys")},
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent_id": m["snapshot_id"],
-        "partitions": parts,
-        "metrics": metrics2,
-    }
-    _commit_manifest(root, m2)
-    return m2
+    # replacement geometry can raise the corpus anchor offset; survivors
+    # were already inside the stored bound
+    return _commit_manifest(
+        root,
+        _next_snapshot(spark, root, m, pre_files, set(replaced), metrics, r["anchor"]),
+    )
 
 
 def update_rows(
@@ -927,8 +872,7 @@ def update_rows(
     None = all rows) selects the rows to update. The table needs a unique
     ``key`` column. Returns the new manifest (or the current one when
     nothing matches)."""
-    m = current_manifest(root)
-    if m is None:
+    if current_manifest(root) is None:
         raise FileNotFoundError(f"no committed snapshot at {root}")
     if key.lower() in {c.lower() for c in assignments}:
         # rewriting the merge key would make the MERGE see only the NEW
@@ -945,8 +889,7 @@ def update_rows(
         cur = cur.filter(F.coalesce(pred, F.lit(False)))
     for cname, e in assignments.items():
         cur = cur.withColumn(cname, F.expr(e) if isinstance(e, str) else e)
-    if not cur.limit(1).count():
-        return m
+    # an empty match set routes no rows and returns the current manifest
     return upsert_rows(cur, root, key=key, max_per_file=max_per_file)
 
 
@@ -969,114 +912,53 @@ def delete_rows(
     (NULL keeps the row — SQL DELETE semantics). Works on keyed tables.
 
     Scale shape: finding affected partitions is one manifest-planned scan
-    with the predicate pushed into it (at planet scale the dominant,
-    bounded cost); the rewrite then re-reads ONLY the affected partitions'
-    files. Partitions left empty drop out of the manifest.
+    with the predicate pushed into it, counted per (key values, cell)
+    hive directory (at planet scale the dominant, bounded cost); the
+    rewrite then re-reads ONLY the affected partitions' files, pruned from
+    the same listed scan. Survivor counts are the manifest's ``n_rows``
+    minus the deleted rows. Partitions left empty drop out of the
+    manifest.
     """
-    from ..operators.partition import tag_cells
-
     m = current_manifest(root)
     if m is None:
         raise FileNotFoundError(f"no committed snapshot at {root}")
     keys = _manifest_keys(m)
-    cap = (
-        max_per_file
-        if max_per_file is not None
-        else m.get("metrics", {}).get("max_per_file")
-    )
-    data_dir = os.path.join(root, "data")
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
     hit = F.coalesce(pred, F.lit(False))
-
-    cells_df = spark.createDataFrame(
-        [_part_key(p, keys) for p in m["partitions"]], _plan_schema(keys)
-    )
-    full = tag_cells(read_table(spark, root), cells_df, keys)
-    affected = sorted(
-        tuple(r[k] for k in keys) + (r["cell"],)
-        for r in full.filter(hit).select(*keys, "cell").distinct().collect()
-    )
-    if not affected:
+    if not m["partitions"]:
         return m
-    aff_set = set(affected)
-    aff_parts = [p for p in m["partitions"] if _part_key(p, keys) in aff_set]
-    survivors = tag_cells(
-        _read_partitions(spark, root, m, aff_parts), cells_df, keys
-    ).filter(~hit)
-    survivors = survivors.persist()
-    try:
-        counts = {
-            tuple(r[k] for k in keys) + (r["cell"],): r["n"]
-            for r in survivors.groupBy(*keys, "cell")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        pre_files = {
-            ck: set(
-                glob.glob(
-                    os.path.join(
-                        _part_dir(data_dir, keys, dict(zip(keys, ck)), ck[-1]),
-                        "*.parquet",
-                    )
-                )
-            )
-            for ck in affected
-        }
-        if counts:
-            _write_cells_salted(survivors, counts, cap, data_dir, keys)
-    finally:
-        survivors.unpersist()
-    parts = [
-        dict(p) for p in m["partitions"] if _part_key(p, keys) not in aff_set
-    ]
-    # batched footer pass (see append_rows): never per-cell serial reads
-    survivors_cks = [ck for ck in affected if counts.get(ck, 0) > 0]
-    post_by = {
-        ck: sorted(
-            set(
-                glob.glob(
-                    os.path.join(
-                        _part_dir(data_dir, keys, dict(zip(keys, ck)), ck[-1]),
-                        "*.parquet",
-                    )
-                )
-            )
-            - pre_files[ck]
-        )
-        for ck in survivors_cks
+    table = _read_partitions(spark, root, m, m["partitions"])
+    deleted = {
+        tuple(r[:-1]): r["count"]
+        for r in table.filter(hit).groupBy(*keys, "cell").count().collect()
     }
-    it = iter(
-        _rows_per_file([p for ck in survivors_cks for p in post_by[ck]], spark)
+    if not deleted:
+        return m
+    by_ck = {_part_key(p, keys): p for p in m["partitions"]}
+    counts = {
+        ck: by_ck[ck]["n_rows"] - n
+        for ck, n in deleted.items()
+        if by_ck[ck]["n_rows"] > n
+    }
+    data_dir = os.path.join(root, "data")
+    pre_files = _list_cells(data_dir, keys, deleted)
+    if counts:
+        survivors = _in_cells(table, keys, deleted).filter(~hit)
+        _write_cells_salted(
+            survivors, counts, _table_cap(m, max_per_file), data_dir, keys
+        )
+    metrics = {
+        **m["metrics"],
+        # the stored kNN bound (max_anchor_offset_m) stays: deletion
+        # can only shrink the true offset, so it remains a valid upper
+        # bound for exactness
+        "rows_deleted": m["metrics"].get("rows_deleted", 0)
+        + sum(deleted.values()),
+        "deleted_batches": m["metrics"].get("deleted_batches", 0) + 1,
+    }
+    return _commit_manifest(
+        root, _next_snapshot(spark, root, m, pre_files, set(deleted), metrics)
     )
-    for ck in survivors_cks:
-        post = post_by[ck]
-        parts.append(
-            {
-                "cell": ck[-1],
-                "values": dict(zip(keys, ck)),
-                "n_rows": counts[ck],
-                "files": [os.path.relpath(f, root) for f in post],
-                "file_rows": [next(it) for _ in post],
-            }
-        )
-    parts.sort(key=lambda p: _part_key(p, keys))
-    n_deleted = sum(p["n_rows"] for p in aff_parts) - sum(counts.values())
-    m2 = {
-        **{k: v for k, v in m.items() if k in ("schema", "keys")},
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent_id": m["snapshot_id"],
-        "partitions": parts,
-        "metrics": {
-            **m["metrics"],
-            # the stored kNN bound (max_anchor_offset_m) stays: deletion
-            # can only shrink the true offset, so it remains a valid upper
-            # bound for exactness
-            "rows_deleted": m["metrics"].get("rows_deleted", 0) + n_deleted,
-            "deleted_batches": m["metrics"].get("deleted_batches", 0) + 1,
-        },
-    }
-    _commit_manifest(root, m2)
-    return m2
 
 
 def manifest_at(root: str, snapshot_id: int) -> dict | None:
@@ -1160,8 +1042,6 @@ def read_table(
 
 
 def _schema_struct(manifest: dict):
-    from pyspark.sql.types import StructType
-
     return StructType.fromJson({"type": "struct", "fields": manifest["schema"]})
 
 
@@ -1182,8 +1062,6 @@ def add_column(root: str, name: str, dtype: str) -> dict:
         )
     if any(f["name"] == name for f in m["schema"]):
         raise ValueError(f"column {name!r} already exists")
-    from pyspark.sql.types import StructField, _parse_datatype_string
-
     field = StructField(name, _parse_datatype_string(dtype), True)
     m2 = {
         **m,
@@ -1299,11 +1177,7 @@ def compact_cells(
     if m is None:
         raise FileNotFoundError(f"no committed snapshot at {root}")
     keys = _manifest_keys(m)
-    cap = (
-        max_rows_per_file
-        if max_rows_per_file is not None
-        else m.get("metrics", {}).get("max_per_file")
-    )
+    cap = _table_cap(m, max_rows_per_file)
 
     def needed(p) -> int:
         return 1 if not cap else -(-p["n_rows"] // cap)
@@ -1328,15 +1202,8 @@ def compact_cells(
         return m
     snap = m["snapshot_id"] + 1
     data_dir = os.path.join(root, "data")
-    src = _read_partitions(spark, root, m, todo)
-
-    from ..operators.partition import tag_cells
-
-    plan_df = spark.createDataFrame(
-        [_part_key(p, keys) for p in todo], _plan_schema(keys)
-    )
     tagged = (
-        tag_cells(src, plan_df, keys)
+        _read_partitions(spark, root, m, todo)
         .repartition(max(len(todo), 1), *keys, "cell")
         .sortWithinPartitions(*keys, "cell", "quadkey")
     )

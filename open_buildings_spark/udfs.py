@@ -26,52 +26,6 @@ from .geo.wkt import parse_wkt_batch
 
 ZOOM = 12
 
-GEOM_SUMMARY_TYPE = StructType(
-    [
-        StructField("quadkey", StringType()),
-        StructField("cx", DoubleType()),
-        StructField("cy", DoubleType()),
-        StructField("minx", DoubleType()),
-        StructField("miny", DoubleType()),
-        StructField("maxx", DoubleType()),
-        StructField("maxy", DoubleType()),
-        StructField("area_m2", DoubleType()),
-        StructField("n_parts", IntegerType()),
-    ]
-)
-
-
-@F.pandas_udf(GEOM_SUMMARY_TYPE)
-def geom_summary(wkt: pd.Series) -> pd.DataFrame:
-    """One parse pass per batch -> quadkey (z12, bbox-midpoint anchor exactly
-    like the reference: overture/add_columns.py:40-47), centroid, bbox,
-    equal-area m^2, and part count."""
-    batch = parse_wkt_batch(wkt)
-    bb = kernels.bboxes(batch)
-    cen = kernels.centroids(batch)
-    mid = kernels.bbox_midpoints(batch)
-    area = kernels.area_6933(batch)
-    qk = mercator.lonlat_to_quadkey_np(mid[:, 0], mid[:, 1], ZOOM)
-    nparts = np.zeros(batch.n_geoms, dtype=np.int32)
-    shells = ~batch.ring_is_hole
-    if batch.n_rings:
-        np.add.at(nparts, batch.ring_geom[shells], 1)
-    missing = batch.gtype == -1
-    area = np.where(missing, np.nan, area)
-    return pd.DataFrame(
-        {
-            "quadkey": qk,
-            "cx": cen[:, 0],
-            "cy": cen[:, 1],
-            "minx": bb[:, 0],
-            "miny": bb[:, 1],
-            "maxx": bb[:, 2],
-            "maxy": bb[:, 3],
-            "area_m2": area,
-            "n_parts": nparts,
-        }
-    )
-
 
 def aoi_rings(geometry: dict) -> list:
     """GeoJSON Polygon or MultiPolygon AOI -> flat (ring, is_hole) list.
@@ -259,10 +213,15 @@ def rect_rings_mask(batch) -> np.ndarray:
         ((x[:, :4] == w[:, None]) | (x[:, :4] == e[:, None]))
         & ((y[:, :4] == s[:, None]) | (y[:, :4] == n[:, None]))
     ).all(axis=1)
+    # four DISTINCT corners (bit 2*east + north per vertex): a zero-area
+    # ring can visit only three
+    distinct = (
+        1 << (2 * (x[:, :4] == e[:, None]) + (y[:, :4] == n[:, None]))
+    ).sum(axis=1) == 15
     onemove = (
         (x[:, 1:] != x[:, :4]) ^ (y[:, 1:] != y[:, :4])
     ).all(axis=1)
-    out[idx] = closed & corner & onemove & (w < e) & (s < n)
+    out[idx] = closed & corner & distinct & onemove & (w < e) & (s < n)
     return out
 
 

@@ -2,14 +2,15 @@
 node histogram (exchanges, joins, python evals, window/agg shapes) and
 the parquet-scan PushedFilters/ReadSchema lines — the evidence that
 filters and column pruning reach the scan, broadcasts/shuffles are the
-intended ones, and Python stays off the hot path. Writes
-BENCH/PLANS_r7.md.
+intended ones, and Python stays off the hot path. Writes a markdown
+report (default BENCH/PLANS_r7.md).
 
-Usage: python scripts/plan_audit.py [sf_dir]
+Usage: python scripts/plan_audit.py [sf_dir] [--out PATH]
 """
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
 import os
@@ -61,7 +62,15 @@ INTERESTING = (
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.001")
+    ap.add_argument(
+        "--out",
+        default=os.path.join(REPO, "BENCH", "PLANS_r7.md"),
+        help="markdown report path (default: BENCH/PLANS_r7.md)",
+    )
+    args = ap.parse_args()
+    sf_dir = args.sf_dir
     import __spark_entry__ as entry
     from open_buildings_spark.session import get_spark
 
@@ -116,9 +125,9 @@ def main() -> None:
             lines.append(f"- `{p}`")
         lines.append("")
         print(name, dict(hist))
-    with open(os.path.join(REPO, "BENCH", "PLANS_r7.md"), "w") as fh:
+    with open(args.out, "w") as fh:
         fh.write("\n".join(lines) + "\n")
-    print("wrote BENCH/PLANS_r7.md")
+    print(f"wrote {args.out}")
 
 
 if __name__ == "__main__":

@@ -6,6 +6,8 @@ import json
 import subprocess
 import sys
 
+import pytest
+
 from tests.fixtures import SEYCHELLES_AOI, SEYCHELLES_QUADKEY, SEYCHELLES_WKT
 
 
@@ -250,3 +252,22 @@ def test_cli_s2_window_bad_bbox_errors(tmp_path):
 
     with _pytest.raises(SystemExit, match="order is w,s,e,n"):
         cli.main(["s2-window", "--src", str(tmp_path), "--bbox", "13,41,12,42"])
+
+
+def test_cli_mixture_int_strata(spark, tmp_path, capsys):
+    """``ob mixture`` on an INT strata column: the string --weights keys are
+    coerced to the column's native values before the draw (they used to
+    reach mixture_sample as strings and fail in the quota frame)."""
+    from open_buildings_spark import cli
+
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    spark.createDataFrame(
+        [(f"d{i}", 1 if i < 60 else 2) for i in range(100)],
+        "doc_id string, source int",
+    ).write.parquet(src)
+    cli.main(["mixture", "--src", src, "--dst", dst, "--weights", "1=0.5,2=0.5"])
+    assert "mixture of 80 rows" in capsys.readouterr().out
+    got = spark.read.parquet(dst).groupBy("source").count().collect()
+    assert {r["source"]: r["count"] for r in got} == {1: 40, 2: 40}
+    with pytest.raises(SystemExit, match="no rows"):
+        cli.main(["mixture", "--src", src, "--dst", dst, "--weights", "3=1.0"])

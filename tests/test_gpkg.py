@@ -252,3 +252,23 @@ def test_gp_headers_np_byte_identical():
     h = gp_headers_np(4326, bb)
     for i in range(len(bb)):
         assert h[i].tobytes() == gp_header(4326, tuple(bb[i]))
+
+
+def test_bulk_insert_respects_old_sqlite_variable_cap(monkeypatch):
+    """SQLite builds before 3.32 cap bound parameters at 999 per statement:
+    with the version reported as 3.31, ``_bulk_insert`` must size its
+    multi-row INSERTs under that cap. The connection enforces the old limit
+    itself, so an oversized statement fails here exactly as it would on
+    such a build."""
+    monkeypatch.setattr(gpkg.sqlite3, "sqlite_version_info", (3, 31, 1))
+    ncols = 10
+    db = sqlite3.connect(":memory:")
+    db.setlimit(sqlite3.SQLITE_LIMIT_VARIABLE_NUMBER, 999)
+    cols = ", ".join(f"c{i}" for i in range(ncols))
+    db.execute(f"CREATE TABLE t ({cols})")
+    rows = [tuple(range(r, r + ncols)) for r in range(1000)]
+    gpkg._bulk_insert(db, f"INTO t ({cols})", rows)
+    assert db.execute("SELECT count(*), sum(c0) FROM t").fetchone() == (
+        1000,
+        sum(range(1000)),
+    )

@@ -403,3 +403,26 @@ def test_malformed_simple_row_degrades_alone():
     assert list(b.gtype) == [GT_POLYGON, GT_MISSING, GT_POLYGON]
     assert (b.ring(0) == [[10, 20], [30, 20], [30, 40], [10, 20]]).all()
     assert (b.ring(1) == [[10, 20], [30, 20], [30, 40], [10, 20]]).all()
+
+
+def test_degenerate_rectangle_ring_is_not_a_rect():
+    """A closed 5-vertex ring whose vertices all sit on bbox corners but
+    visit only three of them (zero area) is not a rectangle: both twins of
+    the predicate reject it, so the rect fast path of ``intersects_mask``
+    cannot admit a point the exact kernel rejects."""
+    from open_buildings_spark import udfs
+
+    wkt = "POLYGON((0 0,2 0,2 1,2 0,0 0))"
+    ring = np.array([[0, 0], [2, 0], [2, 1], [2, 0], [0, 0]], dtype=np.float64)
+    assert kernels.rings_rect([(ring, False)]) is None
+    assert not udfs.rect_rings_mask(parse_wkt_batch(pd.Series([wkt])))[0]
+    centre = parse_wkt_batch(pd.Series(["POINT (1 0.5)"]))
+    assert kernels.intersects_mask(centre, [(ring, False)])[0] == (
+        kernels._intersects_exact(centre, [(ring, False)])[0]
+    )
+    # a real rectangle still takes both fast paths
+    rect = np.array([[0, 0], [2, 0], [2, 1], [0, 1], [0, 0]], dtype=np.float64)
+    assert kernels.rings_rect([(rect, False)]) == (0.0, 0.0, 2.0, 1.0)
+    assert udfs.rect_rings_mask(
+        parse_wkt_batch(pd.Series(["POLYGON((0 0,2 0,2 1,0 1,0 0))"]))
+    )[0]

@@ -442,6 +442,66 @@ def test_upsert_guards_and_append_only_cells(spark, enriched, tmp_path):
     assert tbl.read_table(spark, root).count() == enriched.count() + 1
 
 
+def _job_count(spark, fn):
+    """(fn(), number of Spark jobs it ran) — counted from the status
+    tracker through a job group."""
+    sc = spark.sparkContext
+    group = f"job-count-{os.getpid()}-{id(fn)}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_append_upsert_job_shape_and_footer_counts(spark, enriched, tmp_path):
+    """append_rows and upsert_rows validate, route and count a batch in one
+    aggregate and commit from the new files' footers: a handful of Spark
+    jobs each, every cell's n_rows equal to its footer rows, and the kNN
+    anchor bound after an upsert equal to a rescan of the snapshot."""
+    import pyarrow.parquet as pq
+
+    from open_buildings_spark.operators.knn import corpus_anchor_offset_m
+
+    root = str(tmp_path / "tbl")
+    tbl.write_partitioned(
+        enriched.filter(F.hash("doc_id") % 4 != 0), root, max_per_file=500
+    )
+    extra = enriched.filter(F.hash("doc_id") % 4 == 0)
+    m1, jobs = _job_count(spark, lambda: tbl.append_rows(extra, root, batch_id=1))
+    assert jobs <= 6
+    cur = tbl.read_table(spark, root)
+    # replacements whose centroid moves half a degree off their quadkey's
+    # tile (the largest anchor offset in the table afterwards) + inserts
+    batch = (
+        cur.filter(F.col("doc_id").endswith("3"))
+        .withColumn("lon", F.col("lon") + 0.5)
+        .unionByName(
+            cur.filter(F.col("doc_id").endswith("5")).withColumn(
+                "doc_id", F.concat(F.lit("new-"), F.col("doc_id"))
+            )
+        )
+    )
+    m2, jobs = _job_count(spark, lambda: tbl.upsert_rows(batch, root, key="doc_id"))
+    assert jobs <= 10
+    assert tbl.read_table(spark, root).count() == enriched.count() + (
+        enriched.filter(F.col("doc_id").endswith("5")).count()
+    )
+    for m in (m1, m2):
+        for p in m["partitions"]:
+            frows = [
+                pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
+                for f in p["files"]
+            ]
+            assert p["file_rows"] == frows and p["n_rows"] == sum(frows)
+    files = [os.path.join(root, f) for p in m2["partitions"] for f in p["files"]]
+    assert m2["metrics"]["max_anchor_offset_m"] == corpus_anchor_offset_m(
+        spark.read.parquet(*files)
+    )
+    assert m2["metrics"]["max_anchor_offset_m"] > m1["metrics"]["max_anchor_offset_m"]
+
+
 def test_s2_table_lifecycle(spark, enriched, tmp_path):
     """S2 as a table-layer cell provider (table/s2table.py): adaptive
     write routes on S2 key strings, MERGE re-keys movers, time travel
