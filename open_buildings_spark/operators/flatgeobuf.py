@@ -16,20 +16,23 @@ File layout (spec v3):
   window-query structure QGIS/GDAL range reads rely on)
   size-prefixed FlatBuffer ``Feature`` tables, one per feature
 
-Scale shape: feature ENCODING is distributed (one mapInArrow pass; each
-task emits a blob of size-prefixed features to a scratch file and reports
-count/bbox/geometry-types), and only the final single-file assembly is a
-sequential driver-side byte copy — unavoidable for a single-file export
-format, and exactly what the reference pays when it funnels a dataset
-through one ogr2ogr process. The reader is driver-side (FGB without an
-index is a sequential stream), intended for interop/round-trip checks.
+Scale shape: one encode kernel and one file assembler serve both the
+single-file writer and ``sharded_export``. :func:`encode` turns each Arrow
+batch into size-prefixed features plus per-feature leaf records on the
+executors; :func:`write_file` builds the header and index from the leaf
+records, then copies the features — a sequential byte copy, unavoidable for
+a single-file format and exactly what the reference pays when it funnels a
+dataset through one ogr2ogr process. ``write_fgb`` runs them through the
+export funnel (``funnel.py``: one mapInArrow pass to scratch Arrow IPC
+files, streamed back through a bounded prefetch; the leaf-only first read
+is column-pruned); ``sharded_export`` runs them per shard in task memory,
+Hilbert-ordered. The reader is driver-side (FGB without an index is a
+sequential stream), intended for interop/round-trip checks.
 """
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 import struct
 
 import numpy as np
@@ -533,9 +536,10 @@ _HILBERT_MAX = (1 << 16) - 1
 _NODE_DT = np.dtype(
     [("minx", "<f8"), ("miny", "<f8"), ("maxx", "<f8"), ("maxy", "<f8"), ("off", "<u8")]
 )
-# per-feature sidecar record written by the distributed encode pass
+# per-feature leaf record the encode kernel ships next to the features
 _LEAF_DT = np.dtype(
-    [("minx", "<f8"), ("miny", "<f8"), ("maxx", "<f8"), ("maxy", "<f8"), ("nbytes", "<i8")]
+    [("minx", "<f8"), ("miny", "<f8"), ("maxx", "<f8"), ("maxy", "<f8"),
+     ("nbytes", "<i8"), ("gtype", "<i8")]
 )
 
 
@@ -620,17 +624,14 @@ def _index_level_layout(features_count: int, node_size: int):
     return level_num, level_offsets
 
 
-def build_index(
-    leaf_bboxes: np.ndarray,
-    leaf_offsets: np.ndarray,
-    node_size: int = INDEX_NODE_SIZE,
-) -> bytes:
+def build_index(leaf_bboxes: np.ndarray, leaf_offsets: np.ndarray) -> bytes:
     """Serialize the packed R-tree for features ALREADY in file order:
     ``leaf_bboxes`` (N,4) and ``leaf_offsets`` (feature byte positions in
     the features section). Internal bboxes union upward via reduceat —
     O(N) numpy, ~43 bytes/feature of driver memory (inherent to the
     format: index bytes precede the features in one file; planet-scale
-    exports shard instead)."""
+    exports shard instead). Node size is :data:`INDEX_NODE_SIZE`."""
+    node_size = INDEX_NODE_SIZE
     n = len(leaf_offsets)
     if n == 0:
         return b""
@@ -687,272 +688,152 @@ def fgb_columns(schema_fields, wkt_col: str) -> list[tuple[str, int]]:
     return columns
 
 
-def write_fgb_pandas(
-    pdf: pd.DataFrame,
-    path: str,
-    columns: list[tuple[str, int]],
-    wkt_col: str = "wkt",
-    name: str | None = None,
-) -> tuple[int, list[float] | None]:
-    """One in-memory pandas frame -> one complete .fgb file (magic, header
-    with count/envelope, features). The executor-side builder behind
-    :func:`sharded export <..sharded.sharded_export>` — a shard fits in a
-    task, so count and envelope are known before the header is written
-    without the driver funnel ``write_fgb`` needs for one global file.
-    ``columns`` must come from :func:`fgb_columns` on the SPARK schema
-    (pandas dtypes lose int-ness under nulls). Features are Hilbert-sorted
-    in memory and the packed R-tree index written (the shard IS in memory,
-    so the spec's preferred layout is free here). Atomic via .inprogress.
-    Returns (feature count, data envelope [minx,miny,maxx,maxy] or None) —
-    the envelope feeds the shard manifest so window reads prune on TRUE
-    data extents (a geometry can spill past its quadkey's tile bounds:
-    the quadkey anchors at the bbox midpoint)."""
+_FEAT, _LEAF = "__obs_feat", "__obs_leaf"
+
+
+def encode(rb, wkt_col: str, columns: list[tuple[str, int]]):
+    """Executor kernel: one Arrow batch -> ONE encoded row. ``__obs_feat``
+    holds the batch's size-prefixed Feature flatbuffers back to back
+    (:func:`encode_features_batch`); ``__obs_leaf`` holds one
+    :data:`_LEAF_DT` record per feature (bbox, byte size, geometry type),
+    everything the writer needs for the header and index without reading
+    the features. Rows without geometry are dropped."""
+    import pyarrow as pa
+
     from ..geo import kernels
 
-    col_names = [c for c, _ in columns]
-    prop_lists = [pdf[c].tolist() for c in col_names]
-    batch = parse_wkt_batch(pdf[wkt_col])
-    all_feats = encode_features_batch(batch, columns, prop_lists)
+    batch = parse_wkt_batch(rb.column(wkt_col).to_pandas())
     keep = batch.gtype != GT_MISSING
-    feats = list(all_feats[keep])
-    gtypes = {int(t) for t in np.unique(batch.gtype[keep])} if keep.any() else set()
-    n = len(feats)
-    bb = kernels.bboxes(batch)[keep].reshape(n, 4)
-    if n:
-        order = np.argsort(
-            hilbert_from_lonlat((bb[:, 0] + bb[:, 2]) / 2, (bb[:, 1] + bb[:, 3]) / 2),
-            kind="stable",
+    if not keep.any():
+        return None
+    prop_lists = [rb.column(c).to_pylist() for c, _ in columns]
+    feats = encode_features_batch(batch, columns, prop_lists)[keep]
+    # per-feature leaf bboxes from the vectorized kernel (per-row numpy
+    # mins measured ~3x the whole encode)
+    bb = kernels.bboxes(batch)[keep]
+    leaf = np.zeros(len(feats), dtype=_LEAF_DT)
+    leaf["minx"], leaf["miny"], leaf["maxx"], leaf["maxy"] = bb.T
+    leaf["nbytes"] = [len(f) for f in feats]
+    leaf["gtype"] = batch.gtype[keep]
+    return pa.record_batch(
+        [pa.array([b"".join(feats)], pa.binary()), pa.array([leaf.tobytes()], pa.binary())],
+        names=[_FEAT, _LEAF],
+    )
+
+
+def hilbert_ordered(encoded: list) -> list:
+    """:func:`encode`'d batches -> one batch of the same features in the
+    spec's preferred layout: sorted (stably) by the Hilbert value of each
+    bbox center over the world extent. ``sharded_export`` applies it per
+    shard, which sits in task memory; the single-file writer keeps the
+    input order instead of paying a global sort."""
+    import pyarrow as pa
+
+    if not encoded:
+        return encoded
+    leaf = np.concatenate(
+        [np.frombuffer(rb.column(_LEAF)[0].as_py(), _LEAF_DT) for rb in encoded]
+    )
+    blob = memoryview(b"".join(rb.column(_FEAT)[0].as_py() for rb in encoded))
+    ends = np.cumsum(leaf["nbytes"])
+    order = np.argsort(
+        hilbert_from_lonlat(
+            (leaf["minx"] + leaf["maxx"]) / 2, (leaf["miny"] + leaf["maxy"]) / 2
+        ),
+        kind="stable",
+    )
+    feats = b"".join(
+        blob[e - s : e]
+        for s, e in zip(leaf["nbytes"][order].tolist(), ends[order].tolist())
+    )
+    return [
+        pa.record_batch(
+            [
+                pa.array([feats], pa.large_binary()),
+                pa.array([leaf[order].tobytes()], pa.large_binary()),
+            ],
+            names=[_FEAT, _LEAF],
         )
-        feats = [feats[i] for i in order]
-        bb = bb[order]
+    ]
+
+
+def write_file(
+    path: str,
+    batches,
+    columns: list[tuple[str, int]],
+    name: str | None = None,
+) -> tuple[int, list[float] | None]:
+    """Assemble one .fgb from :func:`encode`'d batches (a funnel
+    ``batches`` source). The header and the packed Hilbert R-tree precede
+    the features, so the batches are read twice: first only the leaf
+    records (count, envelope, geometry type, index; ~48 B/feature of
+    driver memory — inherent to the format), then the feature blobs,
+    copied in batch order. ``columns`` come from :func:`fgb_columns` on
+    the SPARK schema. Returns (feature count, data envelope [minx, miny,
+    maxx, maxy] or None) — the envelope feeds the shard manifest, so
+    window reads prune on TRUE data extents (a geometry can spill past its
+    quadkey's tile: the quadkey anchors at the bbox midpoint)."""
+    from .funnel import publish
+
+    leaf = np.concatenate(
+        [np.zeros(0, dtype=_LEAF_DT)]
+        + [
+            np.frombuffer(b, dtype=_LEAF_DT)
+            for rb in batches(columns=[_LEAF])
+            for b in rb.column(_LEAF).to_pylist()
+        ]
+    )
+    n = len(leaf)
+    bb = np.stack([leaf["minx"], leaf["miny"], leaf["maxx"], leaf["maxy"]], axis=1)
     envelope = (
         [float(bb[:, 0].min()), float(bb[:, 1].min()),
          float(bb[:, 2].max()), float(bb[:, 3].max())]
         if n
         else None
     )
-    gtype = gtypes.pop() if len(gtypes) == 1 else GEOM_UNKNOWN
+    gtypes = np.unique(leaf["gtype"])
     header = encode_header(
         name or os.path.splitext(os.path.basename(path))[0],
         envelope,
-        gtype,
+        int(gtypes[0]) if len(gtypes) == 1 else GEOM_UNKNOWN,
         columns,
         n,
         INDEX_NODE_SIZE if n else 0,
     )
-    from ..pdexact import attempt_tmp
-
-    tmp = attempt_tmp(path)
-    with open(tmp, "wb") as out:
+    with publish(path) as tmp, open(tmp, "wb") as out:
         out.write(MAGIC)
         out.write(header)
         if n:
-            sizes = np.asarray([len(f) for f in feats], dtype=np.int64)
-            offsets = np.concatenate([[0], np.cumsum(sizes)[:-1]])
+            offsets = np.concatenate([[0], np.cumsum(leaf["nbytes"])[:-1]])
             out.write(build_index(bb, offsets))
-        out.write(b"".join(feats))
-    os.replace(tmp, path)
+        for rb in batches(columns=[_FEAT]):
+            for blob in rb.column(_FEAT):
+                out.write(blob.as_buffer())
     return n, envelope
 
 
-def write_fgb(
-    df,
-    path: str,
-    wkt_col: str = "wkt",
-    name: str | None = None,
-    index_node_size: int = INDEX_NODE_SIZE,
-    hilbert_sort: bool = False,
-) -> int:
+def write_fgb(df, path: str, wkt_col: str = "wkt", name: str | None = None) -> int:
     """DataFrame (WKT geometry + scalar columns) -> single FlatGeobuf file
-    with the spec's packed Hilbert R-tree index (``index_node_size=0``
-    writes no index, matching the pre-r4 files).
+    with the spec's packed Hilbert R-tree index. :func:`encode` runs in
+    one distributed pass through the export funnel; :func:`write_file`
+    builds the header and index from the leaf records and copies the
+    features in partition order (planet-scale exports use
+    ``sharded_export``). The index is VALID for any feature order — search
+    correctness needs only parent bboxes covering children — so the
+    input's order is kept: engine pipelines are already quadkey-clustered
+    (Z-order locality), and a global Hilbert sort would re-run the
+    upstream plan for its sampling pass. ``sharded_export`` shards get the
+    Hilbert layout for free, in task memory. Rows with missing or
+    unparseable geometry are skipped, matching the reference's GDAL
+    export of geometry-bearing rows only. Returns the feature count."""
+    from functools import partial
 
-    Distributed encode: one mapInArrow pass parses WKT and emits each
-    task's features as a blob scratch file plus per-feature (bbox, size)
-    stats; the driver builds the index from the stats (O(40 B/feature)
-    memory — inherent to the format, since index bytes precede the
-    features; planet-scale exports use ``sharded_export``) and streams the
-    blobs in partition order. The index is VALID for any feature order —
-    search correctness needs only parent bboxes covering children — so the
-    default keeps the input's order (engine pipelines are already
-    quadkey-clustered, i.e. Z-order locality). ``hilbert_sort=True``
-    additionally pre-sorts rows by the Hilbert value of the geometry's
-    first vertex (extracted natively, no extra parse) over the world
-    extent — the spec's preferred layout — at the cost of one global range
-    sort, whose sampling pass re-runs the upstream plan: ~7x slower on an
-    enrichment pipeline, so opt-in. (``sharded_export`` shards get the
-    Hilbert layout for free, in task memory.) Returns the feature count.
-    Rows with missing/unparseable geometry are skipped, matching the
-    reference's GDAL export of geometry-bearing rows only.
-    """
-    import pandas as pd
-    import pyarrow as pa
-    from pyspark import TaskContext
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType
+    from . import funnel
 
-    if index_node_size < 0 or index_node_size == 1:
-        raise ValueError(
-            f"invalid FGB index_node_size {index_node_size} (0 = no index, "
-            "else >= 2)"
-        )
     columns = fgb_columns(df.schema.fields, wkt_col)
-    col_names = [c for c, _ in columns]
-
-    if hilbert_sort:
-        from .aoi import first_vertex_xy
-
-        @F.pandas_udf(LongType())
-        def _hkey(fx: pd.Series, fy: pd.Series) -> pd.Series:
-            h = hilbert_from_lonlat(
-                fx.to_numpy(dtype=np.float64, na_value=0.0),
-                fy.to_numpy(dtype=np.float64, na_value=0.0),
-            )
-            return pd.Series(h.astype(np.int64))
-
-        fx, fy = first_vertex_xy(wkt_col)
-        df = (
-            df.withColumn("__obs_hkey", _hkey(fx, fy))
-            .orderBy("__obs_hkey")
-            .drop("__obs_hkey")
-        )
-
-    widx = df.columns.index(wkt_col)
-    cidx = [df.columns.index(c) for c in col_names]
-
-    out_dir = os.path.dirname(os.path.abspath(path)) or "."
-    work = os.path.join(out_dir, f".{os.path.basename(path)}.parts")
-    if os.path.exists(work):
-        shutil.rmtree(work)
-    os.makedirs(work)
-
-    def enc(batches):
-        from ..geo import kernels
-
-        tc = TaskContext.get()
-        fname = os.path.join(
-            work, f"part-{tc.partitionId():05d}-{tc.taskAttemptId()}.bin"
-        )
-        tmp = fname + ".inprogress"
-        n = 0
-        minx = miny = float("inf")
-        maxx = maxy = float("-inf")
-        gtypes: set[int] = set()
-        bbs: list[np.ndarray] = []
-        fsize: list[int] = []
-        with open(tmp, "wb") as fh:
-            for rb in batches:
-                prop_lists = [rb.column(i).to_pylist() for i in cidx]
-                batch = parse_wkt_batch(rb.column(widx).to_pandas())
-                feats = encode_features_batch(batch, columns, prop_lists)
-                keep = batch.gtype != GT_MISSING
-                kept = feats[keep]
-                if len(kept):
-                    fh.write(b"".join(kept))
-                    fsize.extend(len(f) for f in kept)
-                    n += len(kept)
-                    gtypes.update(int(t) for t in np.unique(batch.gtype[keep]))
-                # per-feature leaf bboxes from the vectorized kernel (per-
-                # row numpy mins in the loop measured ~3x the whole encode)
-                bbs.append(kernels.bboxes(batch)[keep])
-                if batch.coords.size:
-                    minx = min(minx, float(batch.coords[:, 0].min()))
-                    maxx = max(maxx, float(batch.coords[:, 0].max()))
-                    miny = min(miny, float(batch.coords[:, 1].min()))
-                    maxy = max(maxy, float(batch.coords[:, 1].max()))
-        os.replace(tmp, fname)
-        # per-feature leaf stats ride in a binary SIDECAR next to the blob
-        # (44 B/feature, read back with one np.frombuffer per part): a
-        # Spark row set of per-feature stats costs a driver toPandas of
-        # millions of rows (~10 s at sf0.1 — measured), the sidecar ~0
-        leaf = np.zeros(n, dtype=_LEAF_DT)
-        if n:
-            bb = np.concatenate(bbs)
-            leaf["minx"], leaf["miny"] = bb[:, 0], bb[:, 1]
-            leaf["maxx"], leaf["maxy"] = bb[:, 2], bb[:, 3]
-            leaf["nbytes"] = np.asarray(fsize, dtype=np.int64)
-        with open(fname + ".stats", "wb") as sf:
-            sf.write(leaf.tobytes())
-        yield pa.record_batch(
-            [
-                pa.array([os.path.basename(fname)]),
-                pa.array([n], type=pa.int64()),
-                pa.array([minx if n else None], type=pa.float64()),
-                pa.array([miny if n else None], type=pa.float64()),
-                pa.array([maxx if n else None], type=pa.float64()),
-                pa.array([maxy if n else None], type=pa.float64()),
-                pa.array([",".join(str(t) for t in sorted(gtypes))]),
-            ],
-            names=["file", "n", "minx", "miny", "maxx", "maxy", "gtypes"],
-        )
-
-    stats = df.mapInArrow(
-        enc,
-        "file string, n long, minx double, miny double, "
-        "maxx double, maxy double, gtypes string",
-    ).collect()
-
-    kept = sorted(r["file"] for r in stats)
-    total = sum(r["n"] for r in stats)
-    nonempty = [r for r in stats if r["n"]]
-    envelope = (
-        [
-            min(r["minx"] for r in nonempty),
-            min(r["miny"] for r in nonempty),
-            max(r["maxx"] for r in nonempty),
-            max(r["maxy"] for r in nonempty),
-        ]
-        if nonempty
-        else None
-    )
-    seen_types = {int(t) for r in nonempty for t in r["gtypes"].split(",") if t}
-    gtype = seen_types.pop() if len(seen_types) == 1 else GEOM_UNKNOWN
-
-    header = encode_header(
-        name or os.path.splitext(os.path.basename(path))[0],
-        envelope,
-        gtype,
-        columns,
-        total,
-        index_node_size if total else 0,
-    )
-    with open(path + ".inprogress", "wb") as out:
-        out.write(MAGIC)
-        out.write(header)
-        if total and index_node_size:
-            leaves = np.concatenate(
-                [
-                    np.frombuffer(
-                        open(os.path.join(work, f + ".stats"), "rb").read(),
-                        dtype=_LEAF_DT,
-                    )
-                    for f in kept
-                ]
-            )
-            sizes = leaves["nbytes"]
-            offsets = np.concatenate([[0], np.cumsum(sizes)[:-1]])
-            bb = np.stack(
-                [leaves["minx"], leaves["miny"], leaves["maxx"], leaves["maxy"]],
-                axis=1,
-            )
-            out.write(build_index(bb, offsets, index_node_size))
-        out.flush()
-        for fname in kept:
-            # kernel-space copy of each part blob (no user-space buffer
-            # round-trip; ~2x over copyfileobj on hundreds of MB)
-            with open(os.path.join(work, fname), "rb") as src:
-                sz = os.fstat(src.fileno()).st_size
-                off = 0
-                while off < sz:
-                    sent = os.sendfile(
-                        out.fileno(), src.fileno(), off, sz - off
-                    )
-                    if sent == 0:  # pragma: no cover - EOF safety
-                        break
-                    off += sent
-    os.replace(path + ".inprogress", path)
-    shutil.rmtree(work)
-    return total
+    kernel = partial(encode, wkt_col=wkt_col, columns=columns)
+    with funnel.scratch(df, path, kernel) as batches:
+        return write_file(path, batches, columns, name)[0]
 
 
 # --------------------------------------------------------------------------

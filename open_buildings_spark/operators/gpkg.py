@@ -12,11 +12,16 @@ it directly:
 - feature table rows with GeoPackageBinary blobs = an 8-byte 'GP' header
   (version 0, little-endian, envelope type 1) + srs_id + envelope + WKB.
 
-Scale shape: WKT -> WKB encoding runs distributed (one mapInArrow pass to
-scratch parquet parts); only the final SQLite insert is driver-side — a
-single-file SQLite database is inherently single-writer, the same funnel
-the reference pays inside one GDAL process. The reader exists for
-round-trip checks and interop ingestion.
+Scale shape: one encode kernel and one file assembler serve both the
+single-file writer and ``sharded_export``. :func:`encode` turns WKT into
+complete GeoPackageBinary blobs, bboxes and Hilbert keys on the executors;
+:func:`write_file` inserts the encoded rows into one SQLite file and
+bulk-loads its rtree. ``write_gpkg`` runs them through the export funnel
+(``funnel.py``: one mapInArrow pass to scratch Arrow IPC files, streamed
+back through a bounded prefetch); ``sharded_export`` runs them per shard
+in task memory. A single-file SQLite database is inherently single-writer,
+the same funnel the reference pays inside one GDAL process. The reader
+exists for round-trip checks and interop ingestion.
 
 Determinism: ``last_change`` is a fixed parameter (like the STAC sink's
 item_datetime), never the wall clock.
@@ -25,7 +30,6 @@ item_datetime), never the wall clock.
 from __future__ import annotations
 
 import os
-import shutil
 import sqlite3
 import struct
 
@@ -243,8 +247,8 @@ def _rtree_bulk_load(
     cap = (node_size - 4) // 24
     if hkeys is None:
         # ``hkeys`` lets the caller ship the Hilbert sort key from the
-        # distributed encode pass (write_gpkg does); computing it here
-        # serializes ~1.5 s/1.75M rows onto the single-writer driver
+        # distributed encode kernel (write_file does); computing it here
+        # serializes ~1.5 s/1.75M rows onto the single writer
         from .flatgeobuf import hilbert_from_lonlat
 
         hkeys = hilbert_from_lonlat(
@@ -425,10 +429,18 @@ def _rtree_finish(db: sqlite3.Connection, layer: str, gcol: str = "geom"):
         db.execute(s)
 
 
+# encoded columns: a reserved prefix keeps a user attribute named
+# 'geom'/'minx'/... from colliding with them
+_G, _T, _X0, _Y0, _X1, _Y1, _H = (
+    "__obs_geom", "__obs_gtype", "__obs_minx", "__obs_miny",
+    "__obs_maxx", "__obs_maxy", "__obs_hkey",
+)
+
+
 def gpkg_columns(schema_fields, wkt_col: str) -> list[tuple[str, str]]:
     """Spark schema -> GPKG attribute columns (name, sqlite type); raises
-    on unmappable or reserved names. Shared by the single-file and sharded
-    writers."""
+    on unmappable, reserved or internal names. Shared by the single-file
+    and sharded writers."""
     columns = []
     for f in schema_fields:
         if f.name == wkt_col:
@@ -442,111 +454,146 @@ def gpkg_columns(schema_fields, wkt_col: str) -> list[tuple[str, str]]:
         raise ValueError(
             f"column names reserved by the GPKG layer schema: {sorted(reserved)}"
         )
+    clash = {_G, _T, _X0, _Y0, _X1, _Y1, _H} & {c for c, _ in columns}
+    if clash:
+        raise ValueError(f"column names collide with internal scratch: {sorted(clash)}")
     return columns
 
 
-def write_gpkg_pandas(
-    pdf: pd.DataFrame,
+def encode(rb, wkt_col: str, col_names: list[str]):
+    """Executor kernel: one Arrow batch -> one row per feature with the
+    COMPLETE GeoPackageBinary blob (vectorized header + WKB), geometry
+    type, bbox, the Hilbert key of the bbox center (the rtree bulk-load
+    order) and the attribute values. Rows without geometry are dropped.
+    Everything per-row is built here, in parallel, so the single writer
+    is left with nothing per row but the INSERT itself."""
+    import pyarrow as pa
+
+    from ..geo import kernels
+    from ..geo.wkt import parse_wkt_batch, wkb_from_batch
+    from .flatgeobuf import hilbert_from_lonlat
+
+    batch = parse_wkt_batch(rb.column(wkt_col).to_pandas())
+    idx = np.nonzero(batch.gtype != -1)[0]
+    if not len(idx):
+        return None
+    wkb = wkb_from_batch(batch)
+    bb = kernels.bboxes(batch)[idx]
+    hdrs = gp_headers_np(4326, bb)
+    hk = hilbert_from_lonlat(
+        (bb[:, 0] + bb[:, 2]) / 2.0, (bb[:, 1] + bb[:, 3]) / 2.0
+    ).astype("int64")
+    arrays = [
+        pa.array(
+            [hdrs[k].tobytes() + bytes(wkb[i]) for k, i in enumerate(idx)],
+            type=pa.binary(),
+        ),
+        pa.array(batch.gtype[idx].astype("int32")),
+        pa.array(bb[:, 0]),
+        pa.array(bb[:, 1]),
+        pa.array(bb[:, 2]),
+        pa.array(bb[:, 3]),
+        pa.array(hk),
+    ] + [rb.column(c).take(pa.array(idx)) for c in col_names]
+    return pa.record_batch(
+        arrays, names=[_G, _T, _X0, _Y0, _X1, _Y1, _H] + col_names
+    )
+
+
+def _insert_rows(rb, col_names: list[str]):
+    """Encoded batch -> (INSERT tuples, gtypes, (k, 4) bboxes, Hilbert
+    keys). Arrow ``to_pylist`` hands SQLite exact Python scalars (ints
+    stay exact beyond 2^53, nulls become None) with no pandas round trip.
+    Runs on the funnel's prefetch thread, overlapping SQLite's inserts."""
+    rows = list(
+        zip(rb.column(_G).to_pylist(), *(rb.column(c).to_pylist() for c in col_names))
+    )
+    bb = np.stack(
+        [rb.column(c).to_numpy(zero_copy_only=False) for c in (_X0, _Y0, _X1, _Y1)],
+        axis=1,
+    )
+    return (
+        rows,
+        rb.column(_T).to_numpy(zero_copy_only=False),
+        bb,
+        rb.column(_H).to_numpy(zero_copy_only=False),
+    )
+
+
+def write_file(
     path: str,
+    batches,
     columns: list[tuple[str, str]],
-    wkt_col: str = "wkt",
     layer: str | None = None,
     last_change: str = "2023-05-30T00:00:00Z",
-    spatial_index: bool = True,
 ) -> tuple[int, list[float] | None]:
-    """One in-memory pandas frame -> one complete .gpkg file (OGC
-    12-128r19 metadata tables + feature layer + R-tree spatial index
-    when SQLite's rtree module is available; ``spatial_index=False``
-    skips it — SQLite rtree inserts cost ~12 us/feature, and
-    ``gpkg_bbox_search`` still answers windows via its envelope-scan
-    fallback). The executor-side builder behind sharded export;
-    ``columns`` must come from :func:`gpkg_columns` on the SPARK schema
-    (pandas dtypes lose int-ness under nulls). Atomic via .inprogress.
-    Returns (feature count, data envelope [minx,miny,maxx,maxy] or None)
-    for the shard manifest."""
-    from ..geo import kernels
-    from ..geo.wkt import GT_MULTIPOLYGON, GT_POINT, GT_POLYGON, parse_wkt_batch, wkb_from_batch
+    """Assemble one .gpkg from :func:`encode`'d batches (a funnel
+    ``batches`` source): the OGC 12-128r19 metadata tables, the feature
+    layer (multi-row INSERTs in batch order, fids 1..n), the
+    ``gpkg_rtree_index`` extension bulk-loaded in Hilbert order when
+    SQLite ships rtree, and the layer's contents row. ``columns`` come
+    from :func:`gpkg_columns` on the SPARK schema. Returns (feature
+    count, data envelope [minx, miny, maxx, maxy] or None)."""
+    from functools import partial
+
+    from ..geo.wkt import GT_MULTIPOLYGON, GT_POINT, GT_POLYGON
+    from .funnel import publish
 
     layer = layer or os.path.splitext(os.path.basename(path))[0]
     col_names = [c for c, _ in columns]
-    batch = parse_wkt_batch(pdf[wkt_col])
-    wkb = wkb_from_batch(batch)
-    bb = kernels.bboxes(batch)
-    idx = np.nonzero(batch.gtype != -1)[0]
-    val_cols = []
-    for c in col_names:
-        s = pdf[c]
-        lst = s.astype(object).where(s.notna(), None).tolist()
-        val_cols.append([v.item() if isinstance(v, np.generic) else v for v in lst])
-    from ..pdexact import attempt_tmp
-
-    tmp = attempt_tmp(path)
-    gnames = {GT_POINT: "POINT", GT_POLYGON: "POLYGON", GT_MULTIPOLYGON: "MULTIPOLYGON"}
-    db = sqlite3.connect(tmp)
-    try:
-        _bulk_pragmas(db)
-        _init_gpkg(db)
-        cols_sql = ", ".join(f'"{c}" {t}' for c, t in columns)
-        db.execute(
-            f'CREATE TABLE "{layer}" (fid INTEGER PRIMARY KEY AUTOINCREMENT, '
-            f"geom BLOB{', ' + cols_sql if cols_sql else ''})"
-        )
-        placeholders = ", ".join(["?"] * (1 + len(col_names)))
-        quoted_cols = ", ".join(f'"{c}"' for c in col_names)
-        rows = [
-            (
-                gp_header(4326, (bb[i, 0], bb[i, 1], bb[i, 2], bb[i, 3]))
-                + bytes(wkb[i]),
-                *(col[i] for col in val_cols),
+    cols_sql = ", ".join(f'"{c}" {t}' for c, t in columns)
+    quoted_cols = ", ".join(f'"{c}"' for c in col_names)
+    insert_frag = f'INTO "{layer}" (geom{"," if col_names else ""}{quoted_cols})'
+    n = 0
+    seen_types: set[int] = set()
+    bbs = [np.zeros((0, 4))]
+    hks = [np.zeros(0, dtype=np.int64)]
+    with publish(path) as tmp:
+        db = sqlite3.connect(tmp)
+        try:
+            _bulk_pragmas(db)
+            _init_gpkg(db)
+            db.execute(
+                f'CREATE TABLE "{layer}" (fid INTEGER PRIMARY KEY AUTOINCREMENT, '
+                f"geom BLOB{', ' + cols_sql if cols_sql else ''})"
             )
-            for i in idx
-        ]
-        rt = _rtree_begin(db, layer) if spatial_index else None
-        if rows:
-            db.executemany(
-                f'INSERT INTO "{layer}" (geom{"," if col_names else ""}'
-                f"{quoted_cols}) VALUES ({placeholders})",
-                rows,
-            )
+            rt = _rtree_begin(db, layer)
+            for rows, gtypes, bb, hk in batches(
+                prep=partial(_insert_rows, col_names=col_names)
+            ):
+                _bulk_insert(db, insert_frag, rows)
+                seen_types.update(int(t) for t in np.unique(gtypes))
+                bbs.append(bb)
+                hks.append(hk)
+                n += len(rows)
+            bb = np.concatenate(bbs)
             if rt is not None:
-                # fids are AUTOINCREMENT 1..n in insert order (= idx order)
                 _rtree_bulk_load(
-                    db, rt, np.arange(1, len(idx) + 1, dtype=np.int64),
-                    bb[idx],
+                    db, rt, np.arange(1, n + 1, dtype=np.int64), bb,
+                    hkeys=np.concatenate(hks),
                 )
-        if rt is not None:
-            _rtree_finish(db, layer)
-        n = len(rows)
-        env = (
-            [float(bb[idx, 0].min()), float(bb[idx, 1].min()),
-             float(bb[idx, 2].max()), float(bb[idx, 3].max())]
-            if n
-            else None
-        )
-        seen = {int(t) for t in np.unique(batch.gtype[idx])} if n else set()
-        gtype_name = gnames[next(iter(seen))] if len(seen) == 1 else "GEOMETRY"
-        db.execute(
-            "INSERT INTO gpkg_contents VALUES (?,?,?,?,?,?,?,?,?,?)",
-            (
-                layer, "features", layer, "", last_change,
-                env[0] if n else None, env[1] if n else None,
-                env[2] if n else None, env[3] if n else None,
-                4326,
-            ),
-        )
-        db.execute(
-            "INSERT INTO gpkg_geometry_columns VALUES (?,?,?,?,?,?)",
-            (layer, "geom", gtype_name, 4326, 0, 0),
-        )
-        db.commit()
-    except BaseException:
-        db.close()
-        if os.path.exists(tmp):
-            os.remove(tmp)  # same no-orphan rule as write_gpkg
-        raise
-    else:
-        db.close()
-    os.replace(tmp, path)
+                _rtree_finish(db, layer)
+            env = (
+                [float(bb[:, 0].min()), float(bb[:, 1].min()),
+                 float(bb[:, 2].max()), float(bb[:, 3].max())]
+                if n
+                else None
+            )
+            gnames = {GT_POINT: "POINT", GT_POLYGON: "POLYGON", GT_MULTIPOLYGON: "MULTIPOLYGON"}
+            gtype_name = (
+                gnames[next(iter(seen_types))] if len(seen_types) == 1 else "GEOMETRY"
+            )
+            db.execute(
+                "INSERT INTO gpkg_contents VALUES (?,?,?,?,?,?,?,?,?,?)",
+                (layer, "features", layer, "", last_change, *(env or [None] * 4), 4326),
+            )
+            db.execute(
+                "INSERT INTO gpkg_geometry_columns VALUES (?,?,?,?,?,?)",
+                (layer, "geom", gtype_name, 4326, 0, 0),
+            )
+            db.commit()
+        finally:
+            db.close()
     return n, env
 
 
@@ -556,217 +603,21 @@ def write_gpkg(
     wkt_col: str = "wkt",
     layer: str | None = None,
     last_change: str = "2023-05-30T00:00:00Z",
-    spatial_index: bool = True,
 ) -> int:
-    """DataFrame (WKT geometry + scalar columns) -> single .gpkg file.
+    """DataFrame (WKT geometry + scalar columns) -> single .gpkg file,
+    with the ``gpkg_rtree_index`` extension like GDAL-written files (when
+    this SQLite build ships the rtree module). :func:`encode` runs in one
+    distributed pass through the export funnel; :func:`write_file` streams
+    the encoded rows into SQLite. Rows without geometry are skipped.
+    Returns the feature count."""
+    from functools import partial
 
-    Distributed encode: one mapInArrow pass parses WKT, emits per-row WKB +
-    per-row bbox into scratch parquet parts; the driver then streams those
-    parts into SQLite (executemany per Arrow batch). Rows without geometry
-    are skipped. Returns the feature count.
+    from . import funnel
 
-    ``spatial_index`` (default True, matching GDAL-written files) builds
-    the ``gpkg_rtree_index`` extension; SQLite rtree inserts cost ~12
-    us/feature — at millions of rows that dominates the write, so pass
-    False when write latency matters more than windowed-read speed (the
-    engine's own ``gpkg_bbox_search`` degrades to an envelope scan).
-    """
-    import pyarrow as pa
-    import pyarrow.dataset as pads
-
-    from ..geo import kernels
-    from ..geo.wkt import GT_MULTIPOLYGON, GT_POINT, GT_POLYGON, parse_wkt_batch, wkb_from_batch
-
-    layer = layer or os.path.splitext(os.path.basename(path))[0]
     columns = gpkg_columns(df.schema.fields, wkt_col)
-    col_names = [c for c, _ in columns]
-    widx = df.columns.index(wkt_col)
-    cidx = [df.columns.index(c) for c in col_names]
-
-    scratch = path + ".parts"
-    if os.path.exists(scratch):
-        shutil.rmtree(scratch)
-
-    # internal scratch columns carry a reserved prefix so a user attribute
-    # named 'geom'/'minx'/... cannot produce a duplicate-column scratch schema
-    _g, _t, _x0, _y0, _x1, _y1, _h = (
-        "__obs_geom", "__obs_gtype", "__obs_minx", "__obs_miny",
-        "__obs_maxx", "__obs_maxy", "__obs_hkey",
-    )
-    clash = {_g, _t, _x0, _y0, _x1, _y1, _h} & set(col_names)
-    if clash:
-        raise ValueError(f"column names collide with internal scratch: {sorted(clash)}")
-    out_schema = (
-        f"{_g} binary, {_t} int, {_x0} double, {_y0} double, "
-        f"{_x1} double, {_y1} double, {_h} long, "
-        + ", ".join(f"`{c}` {df.schema[c].dataType.simpleString()}" for c in col_names)
-    )
-
-    def enc(batches):
-        for rb in batches:
-            batch = parse_wkt_batch(rb.column(widx).to_pandas())
-            wkb = wkb_from_batch(batch)
-            bb = kernels.bboxes(batch)
-            keep = batch.gtype != -1
-            idx = np.nonzero(keep)[0]
-            if not len(idx):
-                continue
-            # ship the COMPLETE GeoPackageBinary blob (header + wkb): the
-            # header build is vectorized and runs here in parallel, so the
-            # single-writer driver loop is left with nothing per-row but
-            # the executemany itself
-            hdrs = gp_headers_np(4326, bb[idx])
-            # Hilbert sort key for the rtree bulk load, computed HERE in
-            # the parallel pass instead of on the single-writer driver
-            from .flatgeobuf import hilbert_from_lonlat
-
-            hk = hilbert_from_lonlat(
-                (bb[idx, 0] + bb[idx, 2]) / 2.0,
-                (bb[idx, 1] + bb[idx, 3]) / 2.0,
-            ).astype("int64")
-            arrays = [
-                pa.array(
-                    [hdrs[k].tobytes() + bytes(wkb[i]) for k, i in enumerate(idx)],
-                    type=pa.binary(),
-                ),
-                pa.array(batch.gtype[idx].astype("int32")),
-                pa.array(bb[idx, 0]),
-                pa.array(bb[idx, 1]),
-                pa.array(bb[idx, 2]),
-                pa.array(bb[idx, 3]),
-                pa.array(hk),
-            ] + [rb.column(i).take(pa.array(idx)) for i in cidx]
-            yield pa.record_batch(
-                arrays, names=[_g, _t, _x0, _y0, _x1, _y1, _h] + col_names
-            )
-
-    df.mapInArrow(enc, out_schema).write.mode("overwrite").parquet(scratch)
-
-    gnames = {GT_POINT: "POINT", GT_POLYGON: "POLYGON", GT_MULTIPOLYGON: "MULTIPOLYGON"}
-    from ..pdexact import attempt_tmp
-
-    tmp = attempt_tmp(path)
-    db = sqlite3.connect(tmp)
-    try:
-        _bulk_pragmas(db)
-        _init_gpkg(db)
-        cols_sql = ", ".join(f'"{c}" {t}' for c, t in columns)
-        db.execute(
-            f'CREATE TABLE "{layer}" (fid INTEGER PRIMARY KEY AUTOINCREMENT, '
-            f"geom BLOB{', ' + cols_sql if cols_sql else ''})"
-        )
-        rt = _rtree_begin(db, layer) if spatial_index else None
-        rtree_bbs: list[np.ndarray] = []
-        rtree_hks: list[np.ndarray] = []
-        n = 0
-        seen_types: set[int] = set()
-        gminx = gminy = float("inf")
-        gmaxx = gmaxy = float("-inf")
-        quoted_cols = ", ".join(f'"{c}"' for c in col_names)
-        insert_frag = (
-            f'INTO "{layer}" (geom{"," if col_names else ""}{quoted_cols})'
-        )
-        ds = pads.dataset(scratch, format="parquet")
-
-        def _prep(rb):
-            # arrow to_pylist hands SQLite exact python scalars directly
-            # (ints stay exact beyond 2^53, nulls become None) — no pandas
-            # round-trip per batch
-            names = rb.schema.names
-            geoms_l = rb.column(names.index(_g)).to_pylist()
-            gtypes_np = rb.column(names.index(_t)).to_numpy(
-                zero_copy_only=False
-            )
-            bx0 = rb.column(names.index(_x0)).to_numpy(zero_copy_only=False)
-            by0 = rb.column(names.index(_y0)).to_numpy(zero_copy_only=False)
-            bx1 = rb.column(names.index(_x1)).to_numpy(zero_copy_only=False)
-            by1 = rb.column(names.index(_y1)).to_numpy(zero_copy_only=False)
-            hk = rb.column(names.index(_h)).to_numpy(zero_copy_only=False)
-            val_cols = [
-                rb.column(names.index(c)).to_pylist() for c in col_names
-            ]
-            # geoms arrive as COMPLETE GeoPackageBinary blobs (header
-            # prepended executor-side by enc) — zip, don't rebuild
-            rows = list(zip(geoms_l, *val_cols)) if val_cols else [
-                (g0,) for g0 in geoms_l
-            ]
-            return rows, gtypes_np, bx0, by0, bx1, by1, hk
-
-        # a one-thread prefetcher decodes/prepares the NEXT batch while
-        # SQLite executes the current multi-row INSERTs: executemany and
-        # the arrow decode both release the GIL, so the single-writer
-        # funnel overlaps its python prep with its C execution
-        from queue import Queue
-        from threading import Thread
-
-        _q: Queue = Queue(maxsize=2)
-
-        def _reader():
-            try:
-                for rb in ds.to_batches():
-                    _q.put(("b", _prep(rb)))
-            except BaseException as ex:  # surfaced in the consumer loop
-                _q.put(("e", ex))
-            else:
-                _q.put(("end", None))
-
-        _t_rd = Thread(target=_reader, daemon=True)
-        _t_rd.start()
-        while True:
-            kind, payload = _q.get()
-            if kind == "end":
-                break
-            if kind == "e":
-                raise payload
-            rows, gtypes_np, bx0, by0, bx1, by1, hk = payload
-            seen_types.update(int(t) for t in np.unique(gtypes_np))
-            if rows:
-                _bulk_insert(db, insert_frag, rows)
-                if rt is not None:
-                    rtree_bbs.append(
-                        np.stack([bx0, by0, bx1, by1], axis=1)
-                    )
-                    rtree_hks.append(hk)
-                n += len(rows)
-                gminx = min(gminx, float(bx0.min()))
-                gminy = min(gminy, float(by0.min()))
-                gmaxx = max(gmaxx, float(bx1.max()))
-                gmaxy = max(gmaxy, float(by1.max()))
-        _t_rd.join()
-        if rt is not None and rtree_bbs:
-            _rtree_bulk_load(
-                db, rt, np.arange(1, n + 1, dtype=np.int64),
-                np.concatenate(rtree_bbs),
-                hkeys=np.concatenate(rtree_hks),
-            )
-        if rt is not None:
-            _rtree_finish(db, layer)
-        gtype_name = (
-            gnames[next(iter(seen_types))] if len(seen_types) == 1 else "GEOMETRY"
-        )
-        db.execute(
-            "INSERT INTO gpkg_contents VALUES (?,?,?,?,?,?,?,?,?,?)",
-            (
-                layer, "features", layer, "", last_change,
-                gminx if n else None, gminy if n else None,
-                gmaxx if n else None, gmaxy if n else None, 4326,
-            ),
-        )
-        db.execute(
-            "INSERT INTO gpkg_geometry_columns VALUES (?,?,?,?,?,?)",
-            (layer, "geom", gtype_name, 4326, 0, 0),
-        )
-        db.commit()
-    except BaseException:
-        db.close()
-        if os.path.exists(tmp):
-            os.remove(tmp)  # never leak a multi-GB hidden .inprogress file
-        raise
-    else:
-        db.close()
-    os.replace(tmp, path)
-    shutil.rmtree(scratch)
-    return n
+    kernel = partial(encode, wkt_col=wkt_col, col_names=[c for c, _ in columns])
+    with funnel.scratch(df, path, kernel) as batches:
+        return write_file(path, batches, columns, layer, last_change)[0]
 
 
 def _blob_to_wkt(blob: bytes) -> str | None:

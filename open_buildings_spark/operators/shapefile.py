@@ -14,16 +14,19 @@ Technical Description", 1998) plus dBASE III for attributes:
 - ``.dbf``: dBASE III — field descriptors (name <= 10 chars; C/N types) and
   fixed-width ASCII records.
 
-Scale shape: like the FGB sink, record ENCODING is distributed (mapInArrow
-to per-task scratch blobs for .shp payloads and .dbf rows); the driver
-assembles the three files (offsets depend on global record order — the
-same single-file funnel GDAL pays). Reader for round-trips/interop.
+Scale shape: one encode kernel and one file assembler serve both the
+single-file writer and ``sharded_export``. :func:`encode` turns each Arrow
+batch into ready .shp records and .dbf rows on the executors;
+:func:`write_file` patches in the global record numbers (offsets depend on
+global record order — the same single-file funnel GDAL pays), builds the
+.shx and writes the triple. ``write_shp`` runs them through the export
+funnel (``funnel.py``: one mapInArrow pass to scratch Arrow IPC files,
+streamed back through a bounded prefetch); ``sharded_export`` runs them
+per shard in task memory. Reader for round-trips/interop.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
 import struct
 
 import numpy as np
@@ -168,9 +171,10 @@ def _dbf_value(v, ftype: str, length: int, dec: int) -> bytes:
 def _dbf_column(s: pd.Series, ftype: str, flen: int, dec: int) -> np.ndarray:
     """Vectorized :func:`_dbf_value` for a whole column -> ``S{flen}``
     array (fixed-width, space-padded, byte-identical to the scalar
-    encoder). The single-file driver assembly calls this once per column
-    per batch instead of once per cell — the per-row Python loop was the
-    export's bottleneck at millions of rows."""
+    encoder, which stays as its test reference). The encode kernel calls
+    this once per column per batch instead of once per cell. A number too
+    wide for the field raises :class:`~.funnel.EncodeError` naming the
+    series' name and the offending row's index label."""
     k = len(s)
     if ftype == "L":
         out = np.full(k, b"?", dtype="S1")
@@ -196,11 +200,16 @@ def _dbf_column(s: pd.Series, ftype: str, flen: int, dec: int) -> np.ndarray:
         strs = np.char.mod(f"%.{dec}f", np.asarray(vals, dtype=np.float64))
     else:
         strs = np.char.mod("%d", np.asarray(vals, dtype=np.int64))
-    if (np.char.str_len(strs) > flen).any():
+    wide = np.nonzero(np.char.str_len(strs) > flen)[0]
+    if len(wide):
         # never truncate digits — a chopped number is silent corruption
-        bad = strs[np.char.str_len(strs) > flen][0]
-        raise ValueError(
-            f"value {bad!r} does not fit DBF numeric field width {flen}"
+        from .funnel import EncodeError
+
+        row = s.index[np.nonzero(mask)[0][wide[0]]]
+        raise EncodeError(
+            s.name, int(row),
+            f"value {str(strs[wide[0]])!r} does not fit DBF numeric field "
+            f"width {flen}",
         )
     out[mask] = np.char.rjust(strs.astype(f"S{flen}"), flen)
     return out
@@ -225,14 +234,197 @@ def shp_columns(schema_fields, wkt_col: str) -> list[tuple[str, str]]:
     return columns
 
 
-def _assemble_shp(base, shp_records, shx_records, dbf_records, fields, n,
-                  shape_type, bbox) -> None:
-    """Write the .shp/.shx/.dbf triple from accumulated record bytes.
-    Each file lands via an attempt-unique tmp + atomic rename, so a killed
-    or concurrent attempt never leaves a truncated/interleaved final."""
-    from ..pdexact import attempt_tmp
+def encode(rb, wkt_col: str, columns: list[tuple[str, str]]):
+    """Executor kernel: one Arrow batch -> ONE encoded row holding the
+    whole batch as three blobs plus its shape types and bbox:
 
-    minx, miny, maxx, maxy = bbox
+    - ``__obs_shp``: the .shp records, each behind an 8-byte header with
+      the content length filled in and the record number left 0 (only
+      the writer knows the global order);
+    - ``__obs_lens``: per-record byte lengths (>i4), for the header
+      positions and the .shx table;
+    - ``__obs_dbf``: the fixed-width dBASE rows, from the vectorized
+      column encoder (nullable ints kept exact beyond 2^53).
+
+    Closed single-ring polygons (the dominant shape) encode as one
+    structured-array fill per ring-length group; points, multipolygons,
+    holes and degenerate rings take the scalar record encoders. Rows
+    without geometry are dropped. A value too wide for its DBF field
+    raises :class:`~.funnel.EncodeError`."""
+    import pyarrow as pa
+
+    from ..geo.wkt import GT_POINT, parse_wkt_batch
+    from ..pdexact import int_types_mapper
+
+    fields = _dbf_fields(columns)
+    col_names = [c for c, _ in columns]
+    batch = parse_wkt_batch(rb.column(wkt_col).to_pandas())
+    ng = batch.n_geoms
+    bounds = np.searchsorted(batch.ring_geom, np.arange(ng + 1))
+    ro = batch.ring_offsets
+    coords = batch.coords
+    nrings = bounds[1:] - bounds[:-1]
+    # clamp the first-ring index: geoms with no rings (null/garbage WKT)
+    # get a placeholder that must stay in bounds even when the whole
+    # batch has zero rings — they are masked out via `one`
+    fr = np.minimum(bounds[:-1], max(batch.n_rings - 1, 0))
+    rlen = np.zeros(ng, dtype=np.int64)
+    if batch.n_rings:
+        rlen = ro[fr + 1] - ro[fr]
+    closed = np.zeros(ng, dtype=bool)
+    one = (nrings == 1) & (rlen > 3)
+    if one.any():
+        st = ro[fr[one]]
+        en = ro[fr[one] + 1] - 1
+        closed[one] = (coords[st] == coords[en]).all(axis=1)
+    elig = one & closed & (batch.gtype != GT_POINT) & (batch.gtype != -1)
+    if batch.n_rings:
+        elig &= ~batch.ring_is_hole[fr]
+    rec_by_g: list = [None] * ng
+    bb_by_g = np.zeros((ng, 4), dtype=np.float64)
+    for L in np.unique(rlen[elig]) if elig.any() else []:
+        gsel = np.nonzero(elig & (rlen == L))[0]
+        starts = ro[fr[gsel]]
+        fast_recs, fast_bb = _polygon_records_fast(coords[starts[:, None] + np.arange(L)])
+        for j, g in enumerate(gsel):
+            rec_by_g[g] = fast_recs[j]
+        bb_by_g[gsel] = fast_bb
+    rings_of: dict[int, list] = {}
+    for r in range(batch.n_rings):
+        g = int(batch.ring_geom[r])
+        if not elig[g]:
+            rings_of.setdefault(g, []).append(
+                (batch.ring(r), bool(batch.ring_is_hole[r]))
+            )
+    recs, types, keep, bbs = [], [], [], []
+    for g in range(ng):
+        gt = int(batch.gtype[g])
+        if gt == -1:
+            continue
+        if rec_by_g[g] is not None:
+            recs.append(rec_by_g[g])
+            types.append(SHP_POLYGON)
+            bbs.append(tuple(bb_by_g[g]))
+        elif gt == GT_POINT:
+            ring = rings_of[g][0][0]
+            x, y = ring[0, 0], ring[0, 1]
+            recs.append(_point_record(x, y))
+            types.append(SHP_POINT)
+            bbs.append((x, y, x, y))
+        else:
+            rec = _polygon_record(rings_of.get(g, []))
+            recs.append(rec)
+            types.append(SHP_POLYGON)
+            bbs.append(struct.unpack_from("<dddd", rec, 4))
+        keep.append(g)
+    if not keep:
+        return None
+    bb = np.asarray(bbs, dtype=np.float64)
+    k = len(keep)
+    lens = np.fromiter((len(r) for r in recs), dtype=np.int64, count=k)
+    hdr = np.zeros((k, 2), dtype=">i4")
+    hdr[:, 1] = lens // 2
+    hb = hdr.tobytes()
+    pieces: list = [None] * (2 * k)
+    pieces[0::2] = [hb[i * 8 : i * 8 + 8] for i in range(k)]
+    pieces[1::2] = recs
+    pdf = rb.select(col_names).to_pandas(types_mapper=int_types_mapper())
+    rec_arr = np.empty(
+        k,
+        dtype=[("_del", "S1")]
+        + [(f"f{i}", f"S{fl}") for i, (_, _, fl, _) in enumerate(fields)],
+    )
+    rec_arr["_del"] = b" "
+    for i, (cn, (_, ftype, flen, fdec)) in enumerate(zip(col_names, fields)):
+        # iloc keeps the input row labels, so an overflow names its row
+        rec_arr[f"f{i}"] = _dbf_column(pdf[cn].iloc[keep], ftype, flen, fdec)
+    return pa.record_batch(
+        [
+            pa.array([b"".join(pieces)], type=pa.binary()),
+            pa.array([lens.astype(">i4").tobytes()], type=pa.binary()),
+            pa.array([rec_arr.tobytes()], type=pa.binary()),
+            pa.array([",".join(str(t) for t in sorted(set(types)))]),
+            pa.array([float(bb[:, 0].min())]),
+            pa.array([float(bb[:, 1].min())]),
+            pa.array([float(bb[:, 2].max())]),
+            pa.array([float(bb[:, 3].max())]),
+        ],
+        names=[
+            "__obs_shp", "__obs_lens", "__obs_dbf", "__obs_stypes",
+            "__obs_minx", "__obs_miny", "__obs_maxx", "__obs_maxy",
+        ],
+    )
+
+
+def write_file(
+    path: str, batches, columns: list[tuple[str, str]]
+) -> tuple[int, list[float] | None]:
+    """Assemble the .shp/.shx/.dbf triple at ``path`` (siblings derived)
+    from :func:`encode`'d batches (a funnel ``batches`` source): patch the
+    global record numbers in, build the .shx offsets, and refuse mixed
+    shape types or output past the format's 2 GiB cap BEFORE any file is
+    written. The three files publish together. ``columns`` come from
+    :func:`shp_columns` on the SPARK schema. Returns (feature count, data
+    envelope [minx, miny, maxx, maxy] or None)."""
+    from .funnel import publish
+
+    base = path[:-4] if path.endswith(".shp") else path
+    fields = _dbf_fields(columns)
+    rec_size = 1 + sum(fl for _, _, fl, _ in fields)
+    hdr_size = 32 + 32 * len(fields) + 1
+    shp_records = bytearray()
+    shx_records = bytearray()
+    dbf_records = bytearray()
+    n = 0
+    minx = miny = float("inf")
+    maxx = maxy = float("-inf")
+    shape_type = None
+    offset_words = _HEADER_LEN // 2
+    for rb in batches():
+        for row in rb.to_pylist():
+            blob = bytearray(row["__obs_shp"])
+            lens = np.frombuffer(row["__obs_lens"], dtype=">i4").astype(np.int64)
+            k = len(lens)
+            uniq = row["__obs_stypes"].split(",")
+            if shape_type is None:
+                shape_type = int(uniq[0])
+            if len(uniq) > 1 or int(uniq[0]) != shape_type:
+                raise ValueError("shapefile cannot mix point and polygon shapes")
+            clens = lens // 2
+            # patch the global record numbers into the pre-built headers:
+            # one strided 4-byte scatter per batch, no per-record Python
+            starts = np.concatenate([[0], np.cumsum(8 + lens)[:-1]])
+            view = np.frombuffer(blob, dtype=np.uint8)
+            num_bytes = np.arange(n + 1, n + k + 1, dtype=">i4").view(
+                np.uint8
+            ).reshape(k, 4)
+            view[(starts[:, None] + np.arange(4)).ravel()] = num_bytes.ravel()
+            shp_records += blob
+            sx = np.empty((k, 2), dtype=">i4")
+            sx[:, 0] = offset_words + np.concatenate([[0], np.cumsum(4 + clens)[:-1]])
+            sx[:, 1] = clens
+            shx_records += sx.tobytes()
+            offset_words += int((4 + clens).sum())
+            n += k
+            if (
+                _HEADER_LEN + len(shp_records) > SHP_MAX_BYTES
+                or hdr_size + rec_size * n + 1 > SHP_MAX_BYTES
+            ):
+                # every internal offset is signed-32 in 16-bit words: at
+                # this size the format is the wrong tool
+                raise ValueError(
+                    "output exceeds the shapefile format's 2 GiB cap; use "
+                    "sharded_export (one file per quadkey shard, deeper "
+                    "levels for denser data) or FlatGeobuf"
+                )
+            minx = min(minx, row["__obs_minx"])
+            miny = min(miny, row["__obs_miny"])
+            maxx = max(maxx, row["__obs_maxx"])
+            maxy = max(maxy, row["__obs_maxy"])
+            dbf_records += row["__obs_dbf"]
+    if shape_type is None:
+        shape_type = SHP_POLYGON
+        minx = miny = maxx = maxy = 0.0
 
     def header(total_words: int) -> bytes:
         return (
@@ -244,18 +436,6 @@ def _assemble_shp(base, shp_records, shx_records, dbf_records, fields, n,
             + struct.pack("<dddd", 0.0, 0.0, 0.0, 0.0)
         )
 
-    def commit(suffix: str, payload: bytes) -> None:
-        final = base + suffix
-        tmp = attempt_tmp(final)
-        with open(tmp, "wb") as f:
-            f.write(payload)
-        os.replace(tmp, final)
-
-    commit(".shp", header((_HEADER_LEN + len(shp_records)) // 2) + bytes(shp_records))
-    commit(".shx", header((_HEADER_LEN + len(shx_records)) // 2) + bytes(shx_records))
-
-    rec_size = 1 + sum(fl for _, _, fl, _ in fields)
-    hdr_size = 32 + 32 * len(fields) + 1
     dbf = bytearray()
     dbf += bytes([0x03, 95, 5, 30])  # dBASE III, fixed date (deterministic)
     dbf += struct.pack("<i", n)
@@ -268,88 +448,18 @@ def _assemble_shp(base, shp_records, shx_records, dbf_records, fields, n,
         dbf += bytes([flen, fdec])
         dbf += b"\x00" * 14
     dbf += b"\x0d"
-    dbf += dbf_records
-    dbf += b"\x1a"
-    commit(".dbf", bytes(dbf))
-
-
-def write_shp_pandas(
-    pdf: pd.DataFrame,
-    path: str,
-    columns: list[tuple[str, str]],
-    wkt_col: str = "wkt",
-) -> tuple[int, list[float] | None]:
-    """One in-memory pandas frame -> one .shp/.shx/.dbf triple. The
-    executor-side builder behind sharded export; ``columns`` must come
-    from :func:`shp_columns` on the SPARK schema. Returns (feature
-    count, data envelope [minx,miny,maxx,maxy] or None) for the shard
-    manifest."""
-    from ..geo.wkt import GT_POINT, parse_wkt_batch
-
-    base = path[:-4] if path.endswith(".shp") else path
-    fields = _dbf_fields(columns)
-    col_names = [c for c, _ in columns]
-    val_cols = []
-    for c in col_names:
-        s = pdf[c]
-        val_cols.append(s.astype(object).where(s.notna(), None).tolist())
-    batch = parse_wkt_batch(pdf[wkt_col])
-    bounds = np.searchsorted(batch.ring_geom, np.arange(batch.n_geoms + 1))
-    shp_records = bytearray()
-    shx_records = bytearray()
-    dbf_records = bytearray()
-    n = 0
-    minx = miny = float("inf")
-    maxx = maxy = float("-inf")
-    shape_type = None
-    offset_words = _HEADER_LEN // 2
-    for g in range(batch.n_geoms):
-        gt = int(batch.gtype[g])
-        if gt == -1:
-            continue
-        rings = [
-            (batch.ring(r), bool(batch.ring_is_hole[r]))
-            for r in range(bounds[g], bounds[g + 1])
-        ]
-        if gt == GT_POINT:
-            rec = _point_record(rings[0][0][0, 0], rings[0][0][0, 1])
-            st = SHP_POINT
-            bx0, by0, bx1, by1 = (rings[0][0][0, 0], rings[0][0][0, 1]) * 2
-        else:
-            rec = _polygon_record(rings)
-            st = SHP_POLYGON
-            bx0, by0, bx1, by1 = struct.unpack_from("<dddd", rec, 4)
-        if shape_type is None:
-            shape_type = st
-        elif shape_type != st:
-            raise ValueError("shapefile cannot mix point and polygon shapes")
-        n += 1
-        clen = len(rec) // 2
-        shp_records += struct.pack(">ii", n, clen) + rec
-        shx_records += struct.pack(">ii", offset_words, clen)
-        offset_words += 4 + clen
-        minx, miny = min(minx, bx0), min(miny, by0)
-        maxx, maxy = max(maxx, bx1), max(maxy, by1)
-        row = b" "
-        for (fname, ftype, flen, fdec), col in zip(fields, val_cols):
-            row += _dbf_value(col[g], ftype, flen, fdec)
-        dbf_records += row
-    if shape_type is None:
-        shape_type = SHP_POLYGON
-        minx = miny = maxx = maxy = 0.0
-    dbf_size = 32 + 32 * len(fields) + 1 + len(dbf_records) + 1
-    if (
-        _HEADER_LEN + len(shp_records) > SHP_MAX_BYTES
-        or dbf_size > SHP_MAX_BYTES
-    ):
-        raise ValueError(
-            "shapefile shard exceeds the format's 2 GiB cap; use a deeper "
-            "shard level"
-        )
-    _assemble_shp(
-        base, shp_records, shx_records, dbf_records, fields, n, shape_type,
-        (minx, miny, maxx, maxy),
-    )
+    with publish(base + ".shp") as shp_tmp, publish(base + ".shx") as shx_tmp, \
+            publish(base + ".dbf") as dbf_tmp:
+        with open(shp_tmp, "wb") as f:
+            f.write(header((_HEADER_LEN + len(shp_records)) // 2))
+            f.write(shp_records)
+        with open(shx_tmp, "wb") as f:
+            f.write(header((_HEADER_LEN + len(shx_records)) // 2))
+            f.write(shx_records)
+        with open(dbf_tmp, "wb") as f:
+            f.write(dbf)
+            f.write(dbf_records)
+            f.write(b"\x1a")
     return n, ([minx, miny, maxx, maxy] if n else None)
 
 
@@ -358,237 +468,17 @@ def write_shp(df, path: str, wkt_col: str = "wkt") -> int:
     (pass 'out.shp'; siblings are derived). One shape type per file: POINT
     corpora write type 1, everything else type 5 (polygon/multipolygon);
     mixing points with polygons raises, like GDAL's shapefile driver.
-    Null/invalid geometries are skipped. Returns feature count."""
-    import pyarrow as pa
-    import pyarrow.dataset as pads
+    :func:`encode` runs in one distributed pass through the export funnel;
+    :func:`write_file` assembles the triple. Null/invalid geometries are
+    skipped. Returns feature count."""
+    from functools import partial
 
-    from ..geo.wkt import GT_POINT, parse_wkt_batch
+    from . import funnel
 
-    base = path[:-4] if path.endswith(".shp") else path
     columns = shp_columns(df.schema.fields, wkt_col)
-    fields = _dbf_fields(columns)
-    col_names = [c for c, _ in columns]
-    widx = df.columns.index(wkt_col)
-    cidx = [df.columns.index(c) for c in col_names]
-
-    scratch = base + ".shp.parts"
-    if os.path.exists(scratch):
-        shutil.rmtree(scratch)
-
-    from ..pdexact import int_types_mapper
-
-    _intmap = int_types_mapper()
-    dbf_dtype = np.dtype(
-        [("_del", "S1")]
-        + [(f"f{i}", f"S{fl}") for i, (_, _, fl, _) in enumerate(fields)]
-    )
-
-    def enc(batches):
-        for rb in batches:
-            batch = parse_wkt_batch(rb.column(widx).to_pandas())
-            ng = batch.n_geoms
-            bounds = np.searchsorted(batch.ring_geom, np.arange(ng + 1))
-            ro = batch.ring_offsets
-            coords = batch.coords
-            nrings = bounds[1:] - bounds[:-1]
-            # FAST PATH: closed single-ring polygons (the dominant shape)
-            # encode as one structured-array fill per ring-length group;
-            # points / multis / holes / degenerates take the scalar path
-            # clamp the first-ring index: geoms with no rings (null/garbage
-            # WKT) get a placeholder that must stay in bounds even when the
-            # whole batch has zero rings — they are masked out via `one`
-            fr = np.minimum(bounds[:-1], max(batch.n_rings - 1, 0))
-            rlen = np.zeros(ng, dtype=np.int64)
-            if batch.n_rings:
-                rlen = ro[fr + 1] - ro[fr]
-            closed = np.zeros(ng, dtype=bool)
-            one = (nrings == 1) & (rlen > 3)
-            if one.any():
-                st = ro[fr[one]]
-                en = ro[fr[one] + 1] - 1
-                closed[one] = (coords[st] == coords[en]).all(axis=1)
-            elig = (
-                one & closed & (batch.gtype != GT_POINT) & (batch.gtype != -1)
-            )
-            if batch.n_rings:
-                elig &= ~batch.ring_is_hole[fr]
-            rec_by_g: list = [None] * ng
-            bb_by_g = np.zeros((ng, 4), dtype=np.float64)
-            for L in np.unique(rlen[elig]) if elig.any() else []:
-                gsel = np.nonzero(elig & (rlen == L))[0]
-                starts = ro[fr[gsel]]
-                coords3 = coords[starts[:, None] + np.arange(L)]
-                fast_recs, fast_bb = _polygon_records_fast(coords3)
-                for j, g in enumerate(gsel):
-                    rec_by_g[g] = fast_recs[j]
-                bb_by_g[gsel] = fast_bb
-            rings_of: dict[int, list] = {}
-            for r in range(batch.n_rings):
-                g = int(batch.ring_geom[r])
-                if not elig[g]:
-                    rings_of.setdefault(g, []).append(
-                        (batch.ring(r), bool(batch.ring_is_hole[r]))
-                    )
-            recs, types, keep, bbs = [], [], [], []
-            for g in range(ng):
-                gt = int(batch.gtype[g])
-                if gt == -1:
-                    continue
-                if rec_by_g[g] is not None:
-                    recs.append(rec_by_g[g])
-                    types.append(SHP_POLYGON)
-                    bbs.append(tuple(bb_by_g[g]))
-                    keep.append(g)
-                    continue
-                rings = rings_of.get(g, [])
-                if gt == GT_POINT:
-                    x, y = rings[0][0][0, 0], rings[0][0][0, 1]
-                    recs.append(_point_record(x, y))
-                    types.append(SHP_POINT)
-                    bbs.append((x, y, x, y))
-                else:
-                    rec = _polygon_record(rings)
-                    recs.append(rec)
-                    types.append(SHP_POLYGON)
-                    bbs.append(struct.unpack_from("<dddd", rec, 4))
-                keep.append(g)
-            if not keep:
-                continue
-            idx = pa.array(np.asarray(keep, dtype=np.int64))
-            bb = np.asarray(bbs, dtype=np.float64)
-            k = len(keep)
-            # assemble the whole batch EXECUTOR-side into three blobs (the
-            # former driver loop — per-record header slices, np.char .dbf
-            # encodes — was the single-writer bottleneck at millions of
-            # rows; the driver is left with one 4-byte record-number
-            # scatter per batch plus blob appends):
-            #   shp blob: records with clen pre-filled, recnum=0 patched
-            #             at the driver (global order)
-            #   lens:     per-record byte lengths (>i4) for header
-            #             positions and the .shx table
-            #   dbf blob: fixed-width dBASE rows via the vectorized
-            #             column encoder (types_mapper keeps nullable
-            #             ints exact beyond 2^53)
-            lens = np.fromiter((len(r) for r in recs), dtype=np.int64, count=k)
-            clens = lens // 2
-            hdr = np.zeros((k, 2), dtype=">i4")
-            hdr[:, 1] = clens
-            hb = hdr.tobytes()
-            pieces: list = [None] * (2 * k)
-            pieces[0::2] = [hb[i * 8 : i * 8 + 8] for i in range(k)]
-            pieces[1::2] = recs
-            shp_blob = b"".join(pieces)
-            pdf = rb.select(cidx).to_pandas(types_mapper=_intmap)
-            rec_arr = np.empty(k, dtype=dbf_dtype)
-            rec_arr["_del"] = b" "
-            for i, (cn, (_, ftype, flen, fdec)) in enumerate(
-                zip(col_names, fields)
-            ):
-                rec_arr[f"f{i}"] = _dbf_column(
-                    pdf[cn].iloc[keep].reset_index(drop=True), ftype, flen, fdec
-                )
-            stypes = ",".join(str(t) for t in sorted(set(types)))
-            yield pa.record_batch(
-                [
-                    pa.array([shp_blob], type=pa.binary()),
-                    pa.array([lens.astype(">i4").tobytes()], type=pa.binary()),
-                    pa.array([rec_arr.tobytes()], type=pa.binary()),
-                    pa.array([stypes]),
-                    pa.array([float(bb[:, 0].min())]),
-                    pa.array([float(bb[:, 1].min())]),
-                    pa.array([float(bb[:, 2].max())]),
-                    pa.array([float(bb[:, 3].max())]),
-                ],
-                names=[
-                    "__obs_shp", "__obs_lens", "__obs_dbf", "__obs_stypes",
-                    "__obs_minx", "__obs_miny", "__obs_maxx", "__obs_maxy",
-                ],
-            )
-
-    out_schema = (
-        "__obs_shp binary, __obs_lens binary, __obs_dbf binary, "
-        "__obs_stypes string, __obs_minx double, __obs_miny double, "
-        "__obs_maxx double, __obs_maxy double"
-    )
-    df.mapInArrow(enc, out_schema).write.mode("overwrite").parquet(scratch)
-
-    ds = pads.dataset(scratch, format="parquet")
-    shp_records = bytearray()
-    shx_records = bytearray()
-    dbf_records = bytearray()
-    n = 0
-    minx = miny = float("inf")
-    maxx = maxy = float("-inf")
-    shape_type = None
-    offset_words = _HEADER_LEN // 2
-    # format cap bookkeeping: dbf record size is fixed per schema, so the
-    # projected .dbf size is linear in n and checkable incrementally
-    _dbf_rec_size = 1 + sum(fl for _, _, fl, _ in fields)
-    _dbf_hdr_size = 32 + 32 * len(fields) + 1
-    for rb in ds.to_batches():
-        for ri in range(rb.num_rows):
-            blob = bytearray(rb.column(0)[ri].as_py())
-            lens = np.frombuffer(rb.column(1)[ri].as_py(), dtype=">i4").astype(
-                np.int64
-            )
-            k = len(lens)
-            if k == 0:
-                continue
-            uniq = rb.column(3)[ri].as_py().split(",")
-            if shape_type is None:
-                shape_type = int(uniq[0])
-            if len(uniq) > 1 or int(uniq[0]) != shape_type:
-                shutil.rmtree(scratch)
-                raise ValueError(
-                    "shapefile cannot mix point and polygon shapes"
-                )
-            clens = lens // 2
-            # patch the global record numbers into the pre-built headers:
-            # one strided 4-byte scatter per batch, no per-record Python
-            starts = np.concatenate([[0], np.cumsum(8 + lens)[:-1]])
-            view = np.frombuffer(blob, dtype=np.uint8)
-            num_bytes = np.arange(n + 1, n + k + 1, dtype=">i4").view(
-                np.uint8
-            ).reshape(k, 4)
-            view.reshape(-1)[
-                (starts[:, None] + np.arange(4)).ravel()
-            ] = num_bytes.ravel()
-            shp_records += blob
-            sx = np.empty((k, 2), dtype=">i4")
-            sx[:, 0] = offset_words + np.concatenate(
-                [[0], np.cumsum(4 + clens)[:-1]]
-            )
-            sx[:, 1] = clens
-            shx_records += sx.tobytes()
-            offset_words += int((4 + clens).sum())
-            n += k
-            if (
-                _HEADER_LEN + len(shp_records) > SHP_MAX_BYTES
-                or _dbf_hdr_size + _dbf_rec_size * n + 1 > SHP_MAX_BYTES
-            ):
-                # fail BEFORE any final file is opened (every internal
-                # offset is signed-32 in 16-bit words): at this size the
-                # format is the wrong tool — export sharded instead
-                shutil.rmtree(scratch)
-                raise ValueError(
-                    "output exceeds the shapefile format's 2 GiB cap; use "
-                    "sharded_export (one file per quadkey shard) or "
-                    "FlatGeobuf for data this size"
-                )
-            minx = min(minx, float(rb.column(4)[ri].as_py()))
-            miny = min(miny, float(rb.column(5)[ri].as_py()))
-            maxx = max(maxx, float(rb.column(6)[ri].as_py()))
-            maxy = max(maxy, float(rb.column(7)[ri].as_py()))
-            dbf_records += rb.column(2)[ri].as_py()
-    shutil.rmtree(scratch)
-    if shape_type is None:
-        shape_type = SHP_POLYGON
-        minx = miny = maxx = maxy = 0.0
-    _assemble_shp(
-        base, shp_records, shx_records, dbf_records, fields, n, shape_type,
-        (minx, miny, maxx, maxy),
-    )
-    return n
+    kernel = partial(encode, wkt_col=wkt_col, columns=columns)
+    with funnel.scratch(df, path, kernel) as batches:
+        return write_file(path, batches, columns)[0]
 
 
 def read_shp(

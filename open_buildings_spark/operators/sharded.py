@@ -15,27 +15,27 @@ files).
 Scale shape: one shuffle groups rows by ``substring(quadkey, 1, level)``
 (repartition + sortWithinPartitions, so each task walks its shards as
 contiguous quadkey-sorted runs) and a ``mapInArrow`` pass builds each
-shard's file. Arrow batches — NOT ``applyInPandas`` — carry the rows to
-the builder: Spark's pandas conversion degrades nullable int64 columns to
-float64, silently corrupting integers beyond 2^53; the explicit
-``to_pandas(types_mapper=Int64)`` here keeps them exact. A shard must fit
-in task memory — pick ``level`` so the densest shard does (the partition
-planner's histogram tells you); the shapefile builder additionally
-enforces the format's 2 GiB cap per shard.
+shard's file with the SAME encode kernel and file assembler the
+single-file writers use: each shard's Arrow slices go straight into the
+format's ``encode`` and the encoded batches, held in task memory, into its
+``write_file`` (FlatGeobuf shards first take the spec's Hilbert feature
+order). Arrow ``to_pylist`` keeps nullable int64 values exact, so no
+pandas conversion sits in between. A shard must fit in task memory — pick
+``level`` so the densest shard does (the partition planner's histogram
+tells you); the shapefile assembler additionally enforces the format's
+2 GiB cap per shard.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _EXT = {"fgb": ".fgb", "gpkg": ".gpkg", "shp": ".shp"}
-
-
-from ..pdexact import exact_pandas as _exact_pandas
 
 
 def sharded_export(
@@ -59,7 +59,7 @@ def sharded_export(
     ``'error'`` (default) fails the export loudly, like the table layer's
     append guard; ``'skip'`` drops such rows (they appear in no shard and
     no manifest count)."""
-    from . import flatgeobuf, gpkg, shapefile
+    from . import flatgeobuf, funnel, gpkg, shapefile
 
     if fmt not in _EXT:
         raise ValueError(f"unknown sharded export format {fmt!r}")
@@ -73,21 +73,27 @@ def sharded_export(
     fields = list(df.schema.fields)
     if fmt == "fgb":
         columns = flatgeobuf.fgb_columns(fields, wkt_col)
+        encode = partial(flatgeobuf.encode, wkt_col=wkt_col, columns=columns)
 
-        def build(pdf, path):
-            return flatgeobuf.write_fgb_pandas(pdf, path, columns, wkt_col)
+        def write(path, encoded):
+            batches = funnel.in_memory(flatgeobuf.hilbert_ordered(encoded))
+            return flatgeobuf.write_file(path, batches, columns)
 
     elif fmt == "gpkg":
         columns = gpkg.gpkg_columns(fields, wkt_col)
+        encode = partial(
+            gpkg.encode, wkt_col=wkt_col, col_names=[c for c, _ in columns]
+        )
 
-        def build(pdf, path):
-            return gpkg.write_gpkg_pandas(pdf, path, columns, wkt_col)
+        def write(path, encoded):
+            return gpkg.write_file(path, funnel.in_memory(encoded), columns)
 
     else:
         columns = shapefile.shp_columns(fields, wkt_col)
+        encode = partial(shapefile.encode, wkt_col=wkt_col, columns=columns)
 
-        def build(pdf, path):
-            return shapefile.write_shp_pandas(pdf, path, columns, wkt_col)
+        def write(path, encoded):
+            return shapefile.write_file(path, funnel.in_memory(encoded), columns)
 
     # reader schema, stored in the manifest so window reads (and the
     # empty-result case) get the export's exact column set/types without
@@ -152,9 +158,8 @@ def sharded_export(
             nonlocal pending, cur
             if cur is None:
                 return
-            pdf = _exact_pandas(pending).drop(columns=["_obs_shard"])
             path = os.path.join(out_abs, f"{prefix}-{cur}{ext}")
-            n, env = build(pdf, path)
+            n, env = write(path, pending)
             out_rows.append((cur, os.path.basename(path), n, env))
             pending = []
 
@@ -169,7 +174,9 @@ def sharded_export(
                 if cur != cells[start]:
                     flush()
                     cur = cells[start]
-                pending.append(rb.slice(start, i - start))
+                encoded = encode(rb.slice(start, i - start))
+                if encoded is not None:
+                    pending.append(encoded)
                 start = i
         flush()
         for cell, fname, n, env in out_rows:

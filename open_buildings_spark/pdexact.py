@@ -17,19 +17,6 @@ def int_types_mapper():
     return {pa.int64(): pd.Int64Dtype(), pa.int32(): pd.Int32Dtype()}.get
 
 
-def exact_pandas(batches):
-    """Arrow record batches (or a Table) -> pandas with integer exactness
-    preserved."""
-    import pyarrow as pa
-
-    table = (
-        batches
-        if isinstance(batches, pa.Table)
-        else pa.Table.from_batches(list(batches))
-    )
-    return table.to_pandas(types_mapper=int_types_mapper())
-
-
 def frame_from_rows(rows, cols):
     """Row dicts -> pandas frame via per-column OBJECT series:
     ``pd.DataFrame(rows)`` would infer float64 for int columns containing

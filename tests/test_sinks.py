@@ -320,20 +320,6 @@ def test_sharded_export_null_quadkey_policy(spark, tmp_path):
     assert manifest["total_rows"] == 1
 
 
-def test_write_fgb_rejects_invalid_node_size(spark, tmp_path):
-    import pytest
-
-    from open_buildings_spark.operators import flatgeobuf as fgb
-
-    df = spark.createDataFrame(
-        [("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))",)], "wkt string"
-    )
-    with pytest.raises(ValueError, match="index_node_size"):
-        fgb.write_fgb(df, str(tmp_path / "bad.fgb"), index_node_size=1)
-    with pytest.raises(ValueError, match="index_node_size"):
-        fgb.write_fgb(df, str(tmp_path / "bad2.fgb"), index_node_size=-1)
-
-
 def test_sharded_to_df_window_query(spark, tmp_path):
     """The sharded FGB source must (1) round-trip all rows distributed,
     and (2) answer a bbox window query by pruning shards at the manifest
