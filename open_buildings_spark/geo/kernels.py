@@ -25,7 +25,7 @@ import math
 
 import numpy as np
 
-from .wkt import GeomBatch
+from .wkt import GT_MULTIPOLYGON, GT_POLYGON, GeomBatch, rings_batch
 
 _EPS = 1e-12
 
@@ -377,26 +377,54 @@ def rects_in_interior(
     return clear & strict
 
 
-def rings_rect(rings: list[tuple[np.ndarray, bool]]):
-    """(w, s, e, n) when the ring list is exactly one closed 5-vertex
-    axis-aligned rectangle shell (vertices on distinct bbox corners, one
-    coordinate changing per step, positive extent), else None. Rectangles
-    are the dominant real-world query polygon (tiles, bboxes, country/city
-    rect fixtures); several kernels special-case them."""
-    if len(rings) != 1 or rings[0][1]:
-        return None
-    c = np.asarray(rings[0][0], dtype=np.float64)
-    if c.shape != (5, 2) or not np.array_equal(c[0], c[-1]):
-        return None
-    x, y = c[:4, 0], c[:4, 1]
-    w, e, s, n = x.min(), x.max(), y.min(), y.max()
-    corner = bool(np.all(((x == w) | (x == e)) & ((y == s) | (y == n))))
-    # four DISTINCT corners: a zero-area ring can visit only three
-    distinct = len(set(zip((x == e).tolist(), (y == n).tolist()))) == 4
-    onemove = bool(np.all((c[1:, 0] != c[:4, 0]) ^ (c[1:, 1] != c[:4, 1])))
-    if corner and distinct and onemove and w < e and s < n:
-        return float(w), float(s), float(e), float(n)
-    return None
+def rect_mask(batch: GeomBatch) -> np.ndarray:
+    """(N,) bool: geometry i is EXACTLY an axis-aligned rectangle — one
+    closed 5-vertex shell (a Polygon or a one-part MultiPolygon), no
+    holes, every vertex on a distinct bbox corner, each traversal step
+    changing exactly one coordinate, with positive width and height; its
+    bbox is then its rect. For such a polygon ST_Within degenerates to
+    bbox arithmetic (a convex boundary admits no proper edge crossing
+    once every vertex is inside) and ST_Intersects to a vertex-in-rect
+    test: the containment witness of the spatial joins and the fast path
+    of :func:`intersects_mask`. Rectangles are the dominant real-world
+    AOI shape (tiles, bboxes, map-window queries). Scalar callers pass a
+    one-geometry batch (``wkt.rings_batch``)."""
+    ng = batch.n_geoms
+    out = np.zeros(ng, dtype=bool)
+    if ng == 0 or batch.n_rings == 0:
+        return out
+    nrings = np.diff(batch.ring_start)
+    first = np.minimum(batch.ring_start[:-1], batch.n_rings - 1)
+    sizes = np.diff(batch.ring_offsets)
+    cand = (
+        ((batch.gtype == GT_POLYGON) | (batch.gtype == GT_MULTIPOLYGON))
+        & (nrings == 1)
+        & (sizes[first] == 5)
+        & ~batch.ring_is_hole[first]
+    )
+    idx = np.nonzero(cand)[0]
+    if not len(idx):
+        return out
+    starts = batch.ring_offsets[first[idx]]
+    blk = batch.coords[starts[:, None] + np.arange(5)]
+    x, y = blk[:, :, 0], blk[:, :, 1]
+    closed = (x[:, 0] == x[:, 4]) & (y[:, 0] == y[:, 4])
+    w = x[:, :4].min(axis=1)
+    e = x[:, :4].max(axis=1)
+    s = y[:, :4].min(axis=1)
+    n = y[:, :4].max(axis=1)
+    corner = (
+        ((x[:, :4] == w[:, None]) | (x[:, :4] == e[:, None]))
+        & ((y[:, :4] == s[:, None]) | (y[:, :4] == n[:, None]))
+    ).all(axis=1)
+    # four DISTINCT corners (bit 2*east + north per vertex): a zero-area
+    # ring can visit only three
+    distinct = (
+        1 << (2 * (x[:, :4] == e[:, None]) + (y[:, :4] == n[:, None]))
+    ).sum(axis=1) == 15
+    onemove = ((x[:, 1:] != x[:, :4]) ^ (y[:, 1:] != y[:, :4])).all(axis=1)
+    out[idx] = closed & corner & distinct & onemove & (w < e) & (s < n)
+    return out
 
 
 def intersects_mask(batch: GeomBatch, other_rings: list[tuple[np.ndarray, bool]]) -> np.ndarray:
@@ -412,9 +440,9 @@ def intersects_mask(batch: GeomBatch, other_rings: list[tuple[np.ndarray, bool]]
     n = batch.n_geoms
     if n == 0:
         return np.zeros(0, dtype=bool)
-    rect = rings_rect(other_rings)
-    if rect is not None:
-        w, s, e, nn = rect
+    other = rings_batch(other_rings)
+    if rect_mask(other)[0]:
+        w, s, e, nn = bboxes(other)[0]
         tx = 4.0 * _EPS * max(1.0, nn - s) / (nn - s)
         ty = 4.0 * _EPS * max(1.0, e - w) / (e - w)
         x = batch.coords[:, 0]
@@ -428,11 +456,7 @@ def intersects_mask(batch: GeomBatch, other_rings: list[tuple[np.ndarray, bool]]
             out[idx] = np.logical_or.reduceat(vin, offs[:-1][idx])[: len(idx)]
         rest = np.nonzero(~out & (batch.gtype != -1))[0]
         if len(rest):
-            from ..udfs import _subset_batch
-
-            out[rest] = _intersects_exact(
-                _subset_batch(batch, rest), other_rings
-            )
+            out[rest] = _intersects_exact(batch.take(rest), other_rings)
         return out
     return _intersects_exact(batch, other_rings)
 
@@ -515,11 +539,7 @@ def _intersects_exact(batch: GeomBatch, other_rings: list[tuple[np.ndarray, bool
     # off the hot path
     rest = np.nonzero(~out & contains_other_bbox)[0]
     for g in rest:
-        rings_g = [
-            (batch.ring(r), bool(batch.ring_is_hole[r]))
-            for r in range(batch.n_rings)
-            if batch.ring_geom[r] == g
-        ]
+        rings_g = batch.rings_of(g)
         if not rings_g or len(rings_g[0][0]) < 3:
             continue
         s, b = points_in_polygon(other_pts, rings_g)

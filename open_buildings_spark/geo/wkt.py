@@ -23,6 +23,7 @@ from __future__ import annotations
 import struct
 import warnings
 from dataclasses import dataclass
+from functools import cached_property
 
 import numpy as np
 import pandas as pd
@@ -52,8 +53,61 @@ class GeomBatch:
     def ring(self, i: int) -> np.ndarray:
         return self.coords[self.ring_offsets[i] : self.ring_offsets[i + 1]]
 
-    def geom_rings(self, g: int) -> list[int]:
-        return np.nonzero(self.ring_geom == g)[0].tolist()
+    @cached_property
+    def ring_start(self) -> np.ndarray:
+        """(N+1,) geometry g owns rings [ring_start[g], ring_start[g+1]):
+        ``ring_geom`` ascends by construction (geometries emit in order)."""
+        return np.searchsorted(self.ring_geom, np.arange(self.n_geoms + 1))
+
+    def rings_of(self, g: int) -> list[tuple[np.ndarray, bool]]:
+        """Geometry ``g`` as the (ring, is_hole) list the polygon kernels take."""
+        return [
+            (self.ring(j), bool(self.ring_is_hole[j]))
+            for j in range(self.ring_start[g], self.ring_start[g + 1])
+        ]
+
+    def take(self, idx: np.ndarray) -> GeomBatch:
+        """The geometries at positions ``idx``, in that order, in
+        O(selected): each geometry's rings and each ring's coordinates are
+        contiguous ranges, gathered with one index array apiece."""
+        idx = np.asarray(idx, dtype=np.int64)
+        starts = self.ring_start[idx]
+        counts = self.ring_start[idx + 1] - starts
+        ring_idx = _ranges(starts, counts)
+        sizes = self.ring_offsets[ring_idx + 1] - self.ring_offsets[ring_idx]
+        coord_idx = _ranges(self.ring_offsets[ring_idx], sizes)
+        return GeomBatch(
+            coords=self.coords[coord_idx],
+            ring_offsets=np.concatenate([[0], np.cumsum(sizes)]).astype(np.int64),
+            ring_geom=np.repeat(np.arange(len(idx), dtype=np.int32), counts),
+            ring_is_hole=self.ring_is_hole[ring_idx],
+            gtype=self.gtype[idx],
+        )
+
+
+def _ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Concatenated ``arange(start, start + count)`` for each pair."""
+    total = int(counts.sum())
+    if not total:
+        return np.empty(0, dtype=np.int64)
+    offs = np.cumsum(counts) - counts
+    return np.repeat(starts - offs, counts) + np.arange(total)
+
+
+def rings_batch(rings: list[tuple[np.ndarray, bool]]) -> GeomBatch:
+    """One-polygon ``GeomBatch`` of a (ring, is_hole) list, so scalar
+    callers share the batch kernels (``kernels.rect_mask``, ``bboxes``)."""
+    sizes = [len(c) for c, _ in rings]
+    return GeomBatch(
+        coords=np.concatenate(
+            [np.asarray(c, dtype=np.float64).reshape(-1, 2) for c, _ in rings]
+            or [np.empty((0, 2))]
+        ),
+        ring_offsets=np.concatenate([[0], np.cumsum(sizes)]).astype(np.int64),
+        ring_geom=np.zeros(len(rings), dtype=np.int32),
+        ring_is_hole=np.array([bool(h) for _, h in rings], dtype=bool),
+        gtype=np.array([GT_POLYGON if rings else GT_MISSING], dtype=np.int8),
+    )
 
 
 def _floats(text: str) -> np.ndarray:

@@ -11,7 +11,9 @@ Spark-first plan:
      pushes it to the parquet scan as a string-range filter, and the
      iceberg-lite manifest prunes whole files by quadkey bounds,
   3. exact refinement: one Arrow-batched ``within`` kernel over the
-     surviving candidates only,
+     surviving candidates only (the engine's one refine UDF,
+     ``udfs.make_within_aois``, with literal AOI id and skip columns;
+     the raw path's skip is the joins' native containment witness),
   4. spans ride through untouched (span-sequence invariant).
 """
 
@@ -22,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions import quadkey_prefix_filter
 from ..geo import mercator
-from ..udfs import make_within_aoi
+from ..udfs import make_within_aois
 from .enrich import add_geo_columns, extract_geometry
 
 
@@ -88,7 +90,13 @@ def aoi_query(
             "column; enrich with add_geo_columns(countries=...) first"
         )
     pre_enriched = "quadkey" in df.columns
-    within = make_within_aoi(aoi_feature)
+    refine = make_within_aois([(0, aoi_feature)])
+
+    def within(skip):
+        # skip rows cross the Arrow boundary with blank WKT
+        wkt = F.when(skip, F.lit("")).otherwise(F.col("wkt"))
+        return refine(wkt, F.lit(0), skip)
+
     if pre_enriched:
         # stored-table path: native prefix filter prunes files/row-groups
         # BEFORE any python; the within kernel refines survivors only
@@ -101,7 +109,7 @@ def aoi_query(
         return (
             df.filter(F.col("wkt").isNotNull())
             .filter(first_vertex_in_bbox(aoi_feature))
-            .filter(within(F.col("wkt")))
+            .filter(within(F.lit(False)))
         )
 
     # raw-table path: native first-vertex prefilter leaves a near-final
@@ -113,7 +121,12 @@ def aoi_query(
     # inside the AOI skip the exact raycast entirely; only boundary-cell
     # candidates pay it. The UDF is nondeterministic-marked so the cell
     # equi-join's isnotnull can't split the enrichment into two evals.
-    from .spatial_join import _COVER_CELLS_SCHEMA, classified_cover_cells
+    from .spatial_join import (
+        _COVER_CELLS_SCHEMA,
+        COVER_COLS,
+        classified_cover_cells,
+        containment_witness,
+    )
 
     df = extract_geometry(df)
     df = df.filter(F.col("wkt").isNotNull()).filter(
@@ -124,14 +137,11 @@ def aoi_query(
     if not any(c[6] for c in cover):
         # no interior cell at max cover depth (tiny AOI): the fast path
         # buys nothing — keep the single-eval filter-then-enrich shape
-        df = df.filter(within(F.col("wkt")))
+        df = df.filter(within(F.lit(False)))
         df = add_geo_columns(df)
         if country_iso is not None and "country_iso" in df.columns:
             df = df.filter(F.col("country_iso") == country_iso)
         return df
-    from ..udfs import make_within_aoi_skip
-    from .spatial_join import _interior_skip_col
-
     spark = df.sparkSession
     cells_df = spark.createDataFrame(cover, _COVER_CELLS_SCHEMA).drop("aoi_id")
     df = add_geo_columns(df, keep_bbox=True, deterministic=False)
@@ -139,13 +149,8 @@ def aoi_query(
     # inner cover join is exact-safe for WITHIN: a doc whose home cell
     # falls outside the AOI bbox's cover has a vertex outside the bbox
     cand = df.join(F.broadcast(cells_df), "cell")
-    skip = _interior_skip_col(True)
-    refine = make_within_aoi_skip(aoi_feature)
-    out = cand.filter(
-        refine(F.when(skip, F.lit("")).otherwise(F.col("wkt")), skip)
-    ).drop(
-        "cell", "cw", "cs", "ce", "cn", "_interior", "arect", "arw",
-        "ars", "are", "arn", "minx", "miny", "maxx", "maxy",
+    out = cand.filter(within(containment_witness(True))).drop(
+        *COVER_COLS, "minx", "miny", "maxx", "maxy"
     )
     if country_iso is not None and "country_iso" in out.columns:
         out = out.filter(F.col("country_iso") == country_iso)

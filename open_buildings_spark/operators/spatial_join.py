@@ -9,7 +9,9 @@ engine generalizes both to the classic cell-cover equi-join:
   2. join docs on the cell key (substring of the stored quadkey — no
      geometry touched yet, fully JVM-side),
   3. exact ST_Within refinement per AOI on the surviving candidates only
-     (one Arrow batch pass, AOIs grouped within each batch).
+     (one Arrow batch pass, AOIs grouped within each batch by the one
+     refine core, ``udfs._refine``), except where a native containment
+     witness (:func:`containment_witness`) already proves the row within.
 
 Two physical shapes, picked by the caller:
 
@@ -22,18 +24,27 @@ Two physical shapes, picked by the caller:
   equi-join, nothing broadcast, no per-AOI expression chains — plan size
   is O(1) in the AOI count), and refinement runs on join-carried AOI
   geometry, grouped by AOI within each Arrow batch.
+
+Both shapes carry the same cover-cell columns (:data:`COVER_COLS`: the
+cell rect ``cw..cn``, its ``_interior`` flag, the AOI bbox
+``aminx..amaxy`` and its ``arect`` flag) into the same witness.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
 from ..geo import kernels, mercator
-from ..geo.wkt import parse_wkt_batch
+from ..geo.wkt import rings_batch
+from ..udfs import (
+    aoi_rings,
+    make_aoi_cover,
+    make_cell_interior,
+    make_within_aois,
+    make_within_pairs_skip,
+)
 from .enrich import add_geo_columns, extract_geometry
 
 ZOOM = 12
@@ -129,58 +140,18 @@ def _doc_cell_col(df: DataFrame, cover_level: int) -> "F.Column":
     return quadkey_from_tiles_col(_tile(x01), _tile(y01), cover_level)
 
 
-def _make_within_by_aoi(aois: list[tuple[int, dict]]):
-    """pandas UDF testing within against a per-row AOI id (AOIs grouped
-    per batch so each AOI's kernel runs vectorized over its rows); rows
-    with the ``skip`` flag set (interior-cell containment witness,
-    established natively) are TRUE without a parse or raycast."""
-    from ..udfs import aoi_rings
-
-    rings_by_id = {int(aid): aoi_rings(feat["geometry"]) for aid, feat in aois}
-
-    @F.pandas_udf(BooleanType())
-    def within_by_aoi(
-        wkt: pd.Series, aoi_id: pd.Series, skip: pd.Series
-    ) -> pd.Series:
-        from ..udfs import _subset_batch, _within_skip_eval
-
-        def refine(batch, rest):
-            ids = aoi_id.to_numpy()[rest]
-            sub_out = np.zeros(len(rest), dtype=bool)
-            for aid in np.unique(ids):
-                idx = np.nonzero(ids == aid)[0]
-                sub = _subset_batch(batch, idx)
-                m = kernels.within_mask(sub, rings_by_id[int(aid)])
-                m[sub.gtype == -1] = False
-                sub_out[idx] = m
-            return sub_out
-
-        return _within_skip_eval(wkt, skip, refine)
-
-    return within_by_aoi
-
-
-def feature_rect(geometry: dict):
-    """(w, s, e, n) when the GeoJSON geometry is exactly an axis-aligned
-    rectangle — the driver-side twin of udfs.rect_rings_mask for the
-    broadcast AOI paths (same test: kernels.rings_rect)."""
-    from ..udfs import aoi_rings
-
-    return kernels.rings_rect(aoi_rings(geometry))
-
-
 def classified_cover_cells(
     aois: list[tuple[int, dict]], cover_level: int
-) -> list[tuple[int, str, float, float, float, float, bool]]:
+) -> list[tuple]:
     """Driver-enumerated cover cells with the interior classification the
-    big join computes distributed: (aoi_id, cell, cw, cs, ce, cn,
-    interior). A cell is INTERIOR when its rect lies strictly inside the
-    AOI (``kernels.rects_in_interior`` — same kernel as the big join), so
-    any geometry whose bbox sits in the rect is ST_Within by containment.
-    The AOI list is small here (that's this operator's contract), so the
-    whole classification is a few driver-side numpy calls."""
-    from ..udfs import aoi_rings
-
+    big join computes distributed, one row per (AOI, cell) in
+    ``_COVER_CELLS_SCHEMA`` order: (aoi_id, cell, cw, cs, ce, cn,
+    _interior, arect, aminx, aminy, amaxx, amaxy). A cell is INTERIOR when
+    its rect lies strictly inside the AOI (``kernels.rects_in_interior`` —
+    same kernel as the big join), so any geometry whose bbox sits in the
+    rect is ST_Within by containment. The AOI list is small here (that's
+    this operator's contract), so the whole classification is a few
+    driver-side numpy calls."""
     out = []
     ring = 1 if cover_level > ZOOM else 0
     for aid, feat in aois:
@@ -192,15 +163,13 @@ def classified_cover_cells(
             ],
             dtype=np.float64,
         ).reshape(len(cells), 4)
-        interior = kernels.rects_in_interior(aoi_rings(feat["geometry"]), rects)
-        rect = feature_rect(feat["geometry"])
-        arect = rect is not None
-        arw, ars, are, arn = rect if arect else (0.0, 0.0, 0.0, 0.0)
+        rings = aoi_rings(feat["geometry"])
+        interior = kernels.rects_in_interior(rings, rects)
+        b = rings_batch(rings)
+        arect = bool(kernels.rect_mask(b)[0])
+        abox = tuple(map(float, kernels.bboxes(b)[0]))
         out.extend(
-            (
-                int(aid), c, float(r[0]), float(r[1]), float(r[2]),
-                float(r[3]), bool(it), arect, arw, ars, are, arn,
-            )
+            (int(aid), c, *map(float, r), bool(it), arect, *abox)
             for c, r, it in zip(cells, rects, interior)
         )
     return out
@@ -208,29 +177,46 @@ def classified_cover_cells(
 
 _COVER_CELLS_SCHEMA = (
     "aoi_id int, cell string, cw double, cs double, ce double, cn double, "
-    "_interior boolean, arect boolean, arw double, ars double, "
-    "are double, arn double"
+    "_interior boolean, arect boolean, aminx double, aminy double, "
+    "amaxx double, amaxy double"
+)
+
+# the cover-cell columns a join carries into the witness, dropped after it
+COVER_COLS = (
+    "cell", "cw", "cs", "ce", "cn", "_interior",
+    "arect", "aminx", "aminy", "amaxx", "amaxy",
 )
 
 
-def _interior_skip_col(has_bbox: bool):
-    """Containment witnesses: (a) doc bbox inside its (interior) cover
-    cell's rect — any float error in the rect bounds is harmless, the SAME
-    rect values sit on both sides of the implication; (b) rectangle AOI
-    with the doc bbox strictly inside beyond the raycast kernel's
-    on-boundary tolerance (_EPS*max(1, edge-length)/edge-length per axis),
-    so the exact kernel would provably return True — all vertices strictly
-    inside a convex boundary admit no crossing and defeat no tolerance."""
+def containment_witness(has_bbox: bool):
+    """THE native containment witness of every AOI refine (``aoi_query``,
+    ``aoi_join``, ``aoi_join_big``): rows where it holds are ST_Within
+    their AOI with no parse, no raycast and no WKT bytes over Arrow.
+    Reads the doc bbox ``minx..maxy`` and the :data:`COVER_COLS`:
+
+    (a) doc bbox inside its (interior) cover cell's rect — any float error
+        in the rect bounds is harmless, the SAME rect values sit on both
+        sides of the implication;
+    (b) rectangle AOI (``arect``; its bbox ``aminx..amaxy`` is the rect)
+        with the doc bbox strictly inside beyond the raycast kernel's
+        on-boundary tolerance (_EPS*max(1, opposite-edge-length)/edge-length
+        per axis), so the exact kernel would provably return True — all
+        vertices strictly inside a convex boundary admit no crossing and
+        defeat no tolerance.
+
+    Without stored bbox columns there is no witness: every candidate
+    refines."""
     if not has_bbox:
-        # no stored bbox columns: no witness, every candidate refines
         return F.lit(False)
-    # margins multiplied through by the (positive for arect) edge
-    # lengths — division-free, so ANSI mode never sees a zero divisor on
-    # non-rect rows
-    # 4x the kernel _EPS — see aoi_join_big's skip for the soundness note
+    # 4x the kernel _EPS: float rounding in either inequality form is
+    # relative (~1e-16) and can never bridge a 4x tolerance gap, so the
+    # witness stays strictly sound; rows inside the extra slack simply
+    # take the exact refine. Margins appear multiplied through by the
+    # (positive for arect) edge lengths — division-free, so ANSI mode
+    # never sees a zero divisor on non-rect rows
     eps = 4e-12
-    ah = F.col("arn") - F.col("ars")
-    aw = F.col("are") - F.col("arw")
+    ah = F.col("amaxy") - F.col("aminy")
+    aw = F.col("amaxx") - F.col("aminx")
     mx = eps * F.greatest(F.lit(1.0), ah)
     my = eps * F.greatest(F.lit(1.0), aw)
     return F.coalesce(
@@ -243,10 +229,10 @@ def _interior_skip_col(has_bbox: bool):
         )
         | (
             F.col("arect")
-            & ((F.col("minx") - F.col("arw")) * ah > mx)
-            & ((F.col("are") - F.col("maxx")) * ah > mx)
-            & ((F.col("miny") - F.col("ars")) * aw > my)
-            & ((F.col("arn") - F.col("maxy")) * aw > my)
+            & ((F.col("minx") - F.col("aminx")) * ah > mx)
+            & ((F.col("amaxx") - F.col("maxx")) * ah > mx)
+            & ((F.col("miny") - F.col("aminy")) * aw > my)
+            & ((F.col("amaxy") - F.col("maxy")) * aw > my)
         ),
         F.lit(False),
     )
@@ -280,18 +266,15 @@ def aoi_join(
     has_bbox = {"minx", "miny", "maxx", "maxy"} <= set(df.columns)
     df = df.withColumn("cell", _doc_cell_col(df, cover_level))
     cand = df.join(F.broadcast(cells_df), "cell")
-    skip = _interior_skip_col(has_bbox)
-    refine = _make_within_by_aoi(aois)
+    skip = containment_witness(has_bbox)
+    refine = make_within_aois(aois)
     out = cand.filter(
         refine(
             F.when(skip, F.lit("")).otherwise(F.col("wkt")),
             F.col("aoi_id"),
             skip,
         )
-    ).drop(
-        "cell", "cw", "cs", "ce", "cn", "_interior", "arect", "arw",
-        "ars", "are", "arn",
-    )
+    ).drop(*COVER_COLS)
     if has_bbox and not had_bbox:
         out = out.drop("minx", "miny", "maxx", "maxy")
     return out
@@ -362,7 +345,6 @@ def aoi_join_big(
     import math
 
     from ..functions import quadkey_from_tiles_col
-    from ..udfs import make_aoi_cover, make_cell_interior, make_within_pairs_skip
     from .aoi import first_vertex_xy
 
     cover = make_aoi_cover(cover_level)
@@ -458,47 +440,7 @@ def aoi_join_big(
         & (F.col("_fy") >= F.col("aminy"))
         & (F.col("_fy") <= F.col("amaxy"))
     )
-    if has_bbox:
-        # containment witnesses, established natively: (a) doc bbox inside
-        # an interior cover cell, (b) rectangle AOI (the dominant real AOI
-        # shape — tiles/bboxes/map windows) with the doc bbox strictly
-        # inside beyond the raycast kernel's on-boundary tolerance
-        # (_EPS*max(1, opposite-edge-length)/edge-length per axis), so the
-        # kernel would provably return True: all vertices strictly inside
-        # a convex boundary admit no crossing and defeat no tolerance
-        # margins appear multiplied through by the (positive for arect)
-        # edge lengths — division-free, so ANSI mode never sees a zero
-        # divisor on non-rect rows
-        # 4x the kernel _EPS: float rounding in either inequality form
-        # is relative (~1e-16) and can never bridge a 4x tolerance gap,
-        # so the witness stays strictly sound; rows inside the extra
-        # slack simply take the exact refine
-        eps = 4e-12
-        ah = F.col("amaxy") - F.col("aminy")
-        aw = F.col("amaxx") - F.col("aminx")
-        mx = eps * F.greatest(F.lit(1.0), ah)
-        my = eps * F.greatest(F.lit(1.0), aw)
-        skip = F.coalesce(
-            (
-                F.col("_interior")
-                & (F.col("minx") >= F.col("cw"))
-                & (F.col("maxx") <= F.col("ce"))
-                & (F.col("miny") >= F.col("cs"))
-                & (F.col("maxy") <= F.col("cn"))
-            )
-            | (
-                F.col("arect")
-                & ((F.col("minx") - F.col("aminx")) * ah > mx)
-                & ((F.col("amaxx") - F.col("maxx")) * ah > mx)
-                & ((F.col("miny") - F.col("aminy")) * aw > my)
-                & ((F.col("amaxy") - F.col("maxy")) * aw > my)
-            ),
-            F.lit(False),
-        )
-    else:
-        # pre-enriched docs without stored bbox columns: no containment
-        # witness, every candidate takes the exact path
-        skip = F.lit(False)
+    skip = containment_witness(has_bbox)
     within = make_within_pairs_skip()
     out = cand.filter(
         within(
@@ -507,10 +449,7 @@ def aoi_join_big(
             skip,
         )
     )
-    out = out.drop(
-        "cell", "_fx", "_fy", "_aoi_wkt", "aminx", "aminy", "amaxx", "amaxy",
-        "arect", "_interior", "cw", "cs", "ce", "cn",
-    )
+    out = out.drop("_fx", "_fy", "_aoi_wkt", *COVER_COLS)
     if has_bbox and not had_bbox:
         # bbox columns were added here for the fast path, not by the
         # caller: keep the output schema as before

@@ -15,10 +15,10 @@ gives them the same entry point: ``register(spark)`` once, then
     \"\"\")
 
 Every function is an Arrow-batched pandas UDF over the shared numpy kernels
-(no row-at-a-time Python); two-argument predicates group each batch by the
-right-hand geometry (factorize + contiguous gather), so the common
-literal-AOI case parses the AOI once per batch, and a join-carried AOI
-column stays O(batch) like operators/spatial_join's refine.
+(no row-at-a-time Python); the two-argument predicates run the engine's one
+grouped refine core (``udfs.make_pair_predicate``): each batch groups by the
+right-hand geometry, so the common literal-AOI case parses the AOI once per
+batch, and a join-carried AOI column stays O(batch log batch).
 
 Registered functions (z = 12, the engine/reference tile level):
 
@@ -48,7 +48,7 @@ from pyspark.sql.types import DoubleType, LongType, StringType
 
 from .geo import kernels, mercator
 from .geo.wkt import parse_wkt_batch
-from .udfs import ZOOM, make_pair_predicate, make_within_pairs, plus_code12
+from .udfs import ZOOM, make_pair_predicate, plus_code12
 
 
 @F.pandas_udf(StringType())
@@ -152,7 +152,7 @@ def register(spark: SparkSession) -> None:
     spark.udf.register("ob_s2_key", _ob_s2_key)
     spark.udf.register("ob_quadkey", _ob_quadkey)
     spark.udf.register("ob_point_quadkey", _ob_point_quadkey)
-    spark.udf.register("ob_within", make_within_pairs())
+    spark.udf.register("ob_within", make_pair_predicate(kernels.within_mask))
     spark.udf.register("ob_intersects", make_pair_predicate(kernels.intersects_mask))
     spark.udf.register("ob_area_m2", _ob_area_m2)
     spark.udf.register("ob_centroid_lon", _ob_centroid_lon)

@@ -4,6 +4,16 @@ All per-row math happens inside vectorized numpy kernels over Arrow batches —
 there is no row-at-a-time Python on the hot path (north_rule). The reference's
 equivalents are row-at-a-time DuckDB Python UDFs
 (open_buildings/overture/add_columns.py:33-34).
+
+The within/intersects refine (the reference's one ``ST_Within(geometry,
+aoi)`` step, download_buildings.py:245-252) has one core, :func:`_refine`:
+skip rows are TRUE unparsed, the rest group by AOI key and run the kernel
+once per AOI. Three fixed-arity UDFs sit on it — closure AOIs
+``(wkt, aoi_id, skip)`` (:func:`make_within_aois`: every ``aoi_query``
+path and ``aoi_join``), row-carried AOI WKT ``(wkt, aoi_wkt, skip)``
+(:func:`make_within_pairs_skip`: ``aoi_join_big``) and the two-argument
+SQL predicates (:func:`make_pair_predicate`) — and the cover-cell
+classifier :func:`make_cell_interior` shares its grouping loop.
 """
 
 from __future__ import annotations
@@ -51,56 +61,98 @@ def aoi_rings(geometry: dict) -> list:
     raise ValueError(f"unsupported AOI geometry type {t!r} (use Polygon/MultiPolygon)")
 
 
-def make_within_aoi(aoi_feature: dict):
-    """Factory: pandas UDF testing ST_Within(geom, AOI) for one AOI polygon
-    or multipolygon (the reference's refinement predicate,
-    download_buildings.py:250). The AOI rings ride in the task closure
-    (broadcast once per executor)."""
-    rings = aoi_rings(aoi_feature["geometry"])
-
-    @F.pandas_udf(BooleanType())
-    def within_aoi(wkt: pd.Series) -> pd.Series:
-        batch = parse_wkt_batch(wkt)
-        mask = kernels.within_mask(batch, rings)
-        mask[batch.gtype == -1] = False
-        return pd.Series(mask)
-
-    return within_aoi
+def _aoi_groups(keys: pd.Series, rings_for):
+    """THE grouping loop of every per-AOI refine: rows grouped by AOI key
+    (factorize + stable argsort, so each group's row positions are one
+    contiguous, ascending slice of the order), yielding ``(positions,
+    rings)`` once per distinct key whose ``rings_for(uniques)`` entry is
+    non-empty. NULL keys join no group. O(batch log batch) in total however
+    many distinct AOIs a batch holds."""
+    codes, uniques = pd.factorize(keys)
+    order = np.argsort(codes, kind="stable")
+    bounds = np.searchsorted(codes[order], np.arange(len(uniques) + 1))
+    for u, rings in enumerate(rings_for(uniques)):
+        if rings:
+            yield order[bounds[u] : bounds[u + 1]], rings
 
 
-def _within_skip_eval(wkt: pd.Series, skip: pd.Series, refine) -> pd.Series:
-    """THE skip-flag semantics for every skip-aware within kernel (single-
-    and per-row-AOI variants share this so a fix lands in both): rows with
-    ``skip`` set (interior-cell containment witness, established natively;
-    NA counts as not-skipped) are TRUE with no parse and no raycast; only
-    the remaining rows are parsed and handed to ``refine(batch,
-    rest_positions) -> bool mask``."""
-    sk = skip.fillna(False).astype(bool).to_numpy()
-    out = sk.copy()
-    rest = np.nonzero(~sk)[0]
+def _wkt_rings(wkts) -> list:
+    """Ring lists of distinct AOI WKT strings (each parsed once); None for
+    an unparseable AOI."""
+    ab = parse_wkt_batch(pd.Series(list(wkts), dtype=object))
+    return [None if ab.gtype[u] == -1 else ab.rings_of(u) for u in range(ab.n_geoms)]
+
+
+def _refine(wkt: pd.Series, keys: pd.Series, skip, rings_for, kernel) -> pd.Series:
+    """THE grouped refine core behind every within/intersects UDF: rows
+    with ``skip`` set (a containment witness established natively; NA
+    counts as unset) are TRUE and never parsed; the rest parse once, group
+    by AOI key (:func:`_aoi_groups`), and run ``kernel(batch, rings)``
+    once per AOI over a contiguous O(run) gather. Unparseable geometries
+    and rows of unknown or unparseable AOIs are FALSE."""
+    n = len(wkt)
+    out = np.zeros(n, dtype=bool) if skip is None else (
+        skip.fillna(False).astype(bool).to_numpy()
+    )
+    rest = np.nonzero(~out)[0]
+    if len(rest) < n:
+        wkt = wkt.iloc[rest].reset_index(drop=True)
+        keys = keys.iloc[rest].reset_index(drop=True)
     if len(rest):
-        batch = parse_wkt_batch(wkt.iloc[rest].reset_index(drop=True))
-        out[rest] = refine(batch, rest)
+        batch = parse_wkt_batch(wkt)
+        for idx, rings in _aoi_groups(keys, rings_for):
+            sub = batch if len(idx) == len(rest) else batch.take(idx)
+            m = kernel(sub, rings)
+            m[sub.gtype == -1] = False
+            out[rest[idx]] = m
     return pd.Series(out)
 
 
-def make_within_aoi_skip(aoi_feature: dict):
-    """Single-AOI variant of :func:`make_within_pairs_skip`: skip-flag
-    handling via :func:`_within_skip_eval`; only boundary-cell candidates
-    pay the exact kernel. The caller blanks the WKT for skip rows so
-    their bytes never cross the Arrow boundary."""
-    rings = aoi_rings(aoi_feature["geometry"])
+def make_within_aois(aois: list[tuple[int, dict]]):
+    """ST_Within(geom, AOI) (the reference's refinement predicate,
+    download_buildings.py:250) against closure-carried AOIs, as a pandas
+    UDF ``(wkt, aoi_id, skip)``: ``aois`` is [(aoi_id, GeoJSON feature)],
+    their rings ride in the task closure. Single-AOI callers pass literal
+    id and skip columns. The caller blanks the WKT of skip rows so their
+    bytes never cross the Arrow boundary."""
+    rings = {int(aid): aoi_rings(feat["geometry"]) for aid, feat in aois}
 
     @F.pandas_udf(BooleanType())
-    def within_aoi_skip(wkt: pd.Series, skip: pd.Series) -> pd.Series:
-        def refine(batch, _rest):
-            mask = kernels.within_mask(batch, rings)
-            mask[batch.gtype == -1] = False
-            return mask
+    def within_aois(wkt: pd.Series, aoi_id: pd.Series, skip: pd.Series) -> pd.Series:
+        return _refine(
+            wkt, aoi_id, skip, lambda ids: [rings.get(int(i)) for i in ids],
+            kernels.within_mask,
+        )
 
-        return _within_skip_eval(wkt, skip, refine)
+    return within_aois
 
-    return within_aoi_skip
+
+def make_within_pairs_skip():
+    """ST_Within per row pair ``(wkt, aoi_wkt, skip)``, the AOI geometry
+    carried on the row (the big-big join's refine, each distinct AOI WKT
+    parsed once per batch). The caller blanks both WKT columns of skip
+    rows."""
+
+    @F.pandas_udf(BooleanType())
+    def within_pairs_skip(
+        wkt: pd.Series, aoi_wkt: pd.Series, skip: pd.Series
+    ) -> pd.Series:
+        return _refine(wkt, aoi_wkt, skip, _wkt_rings, kernels.within_mask)
+
+    return within_pairs_skip
+
+
+def make_pair_predicate(kernel):
+    """Two-argument ``(wkt, other_wkt)`` pandas UDF for a spatial
+    predicate (``kernels.within_mask`` / ``intersects_mask``): sqlapi's
+    ``ob_within`` / ``ob_intersects``. A literal right-hand side is one
+    group, parsed once per batch."""
+
+    @F.pandas_udf(BooleanType())
+    def pair_predicate(wkt: pd.Series, other: pd.Series) -> pd.Series:
+        return _refine(wkt, other, None, _wkt_rings, kernel)
+
+    return pair_predicate
 
 
 def prepare_countries(country_list: list[tuple[str, list]]):
@@ -134,7 +186,7 @@ def assign_countries_np(batch, prepared) -> np.ndarray:
             idx = np.nonzero(cand)[0]
             if len(idx) == 0:
                 continue
-            sub = _subset_batch(batch, idx)
+            sub = batch.take(idx)
             hit = kernels.intersects_mask(sub, rings)
             hit_idx = idx[hit]
             out[hit_idx] = iso
@@ -170,65 +222,10 @@ AOI_COVER_TYPE = StructType(
 )
 
 
-def rect_rings_mask(batch) -> np.ndarray:
-    """(N,) bool: geometry i is EXACTLY an axis-aligned rectangle — one
-    closed 5-vertex shell, no holes, every vertex on a distinct bbox
-    corner, each traversal step changing exactly one coordinate, with
-    positive width and height. For such a polygon ST_Within degenerates
-    to bbox arithmetic (a convex boundary admits no proper edge
-    crossing once every vertex is inside), which the spatial joins
-    exploit as a NATIVE containment fast path: candidates whose bbox
-    sits strictly inside the rect (beyond the raycast kernel's
-    on-boundary tolerance) are within with no parse and no raycast.
-    Rectangles are the dominant real-world AOI shape (tiles, bboxes,
-    map-window queries)."""
-    ng = batch.n_geoms
-    out = np.zeros(ng, dtype=bool)
-    if ng == 0 or batch.n_rings == 0:
-        return out
-    bounds = np.searchsorted(batch.ring_geom, np.arange(ng + 1))
-    nrings = bounds[1:] - bounds[:-1]
-    first = np.minimum(bounds[:-1], batch.n_rings - 1)
-    sizes = np.diff(batch.ring_offsets)
-    from .geo.wkt import GT_POLYGON
-
-    cand = (
-        (batch.gtype == GT_POLYGON)
-        & (nrings == 1)
-        & (sizes[first] == 5)
-        & ~batch.ring_is_hole[first]
-    )
-    idx = np.nonzero(cand)[0]
-    if not len(idx):
-        return out
-    starts = batch.ring_offsets[first[idx]]
-    blk = batch.coords[starts[:, None] + np.arange(5)]
-    x, y = blk[:, :, 0], blk[:, :, 1]
-    closed = (x[:, 0] == x[:, 4]) & (y[:, 0] == y[:, 4])
-    w = x[:, :4].min(axis=1)
-    e = x[:, :4].max(axis=1)
-    s = y[:, :4].min(axis=1)
-    n = y[:, :4].max(axis=1)
-    corner = (
-        ((x[:, :4] == w[:, None]) | (x[:, :4] == e[:, None]))
-        & ((y[:, :4] == s[:, None]) | (y[:, :4] == n[:, None]))
-    ).all(axis=1)
-    # four DISTINCT corners (bit 2*east + north per vertex): a zero-area
-    # ring can visit only three
-    distinct = (
-        1 << (2 * (x[:, :4] == e[:, None]) + (y[:, :4] == n[:, None]))
-    ).sum(axis=1) == 15
-    onemove = (
-        (x[:, 1:] != x[:, :4]) ^ (y[:, 1:] != y[:, :4])
-    ).all(axis=1)
-    out[idx] = closed & corner & distinct & onemove & (w < e) & (s < n)
-    return out
-
-
 def make_aoi_cover(level: int):
     """Factory: pandas UDF computing each AOI polygon's bbox, covering
     tile range at ``level``, and the axis-aligned-rectangle flag
-    (:func:`rect_rings_mask`) — the distributed half of the big-big
+    (``kernels.rect_mask``) — the distributed half of the big-big
     spatial join's cell cover (one Arrow pass over the AOI side, no
     driver loop). Invalid/missing geometries get x0 = -1 (filter them
     natively)."""
@@ -237,7 +234,7 @@ def make_aoi_cover(level: int):
     def aoi_cover(wkt: pd.Series) -> pd.DataFrame:
         batch = parse_wkt_batch(wkt)
         bb = kernels.bboxes(batch)
-        arect = rect_rings_mask(batch)
+        arect = kernels.rect_mask(batch)
         w = np.maximum(bb[:, 0], -180.0)
         s = np.maximum(bb[:, 1], -mercator.MERCATOR_LAT_LIMIT)
         e = np.minimum(bb[:, 2], 180.0)
@@ -267,91 +264,6 @@ def make_aoi_cover(level: int):
     return aoi_cover.asNondeterministic()
 
 
-def make_pair_predicate(kernel):
-    """Pandas UDF factory testing a spatial predicate per ROW PAIR
-    (wkt, other_wkt) via ``kernel`` (kernels.within_mask /
-    intersects_mask) — the refinement step of the big-big spatial join,
-    where each candidate row carries its partner geometry out of the cell
-    equi-join. The single shared implementation behind
-    :func:`make_within_pairs` and sqlapi's ``ob_within``/``ob_intersects``.
-
-    Vectorization shape: within each Arrow batch, rows are grouped by the
-    right side (factorize + stable argsort), each unique geometry's WKT
-    parses once, and one vectorized kernel runs per group over a
-    contiguous O(run)-cost gather (no O(batch) work per group — thousands
-    of distinct AOIs per batch stay linear)."""
-
-    @F.pandas_udf(BooleanType())
-    def within_pairs(wkt: pd.Series, aoi_wkt: pd.Series) -> pd.Series:
-        return pd.Series(_pairs_eval(wkt, aoi_wkt, kernel))
-
-    return within_pairs
-
-
-def _pairs_eval(wkt: pd.Series, aoi_wkt: pd.Series, kernel) -> np.ndarray:
-    """Row-pair predicate core shared by :func:`make_pair_predicate` and
-    the skip-aware variant (see its docstring for the vectorization
-    shape)."""
-    n = len(wkt)
-    out = np.zeros(n, dtype=bool)
-    if n == 0:
-        return out
-    codes, uniques = pd.factorize(aoi_wkt)
-    batch = parse_wkt_batch(wkt)
-    ab = parse_wkt_batch(pd.Series(list(uniques), dtype=object))
-    order = np.argsort(codes, kind="stable")
-    sorted_codes = codes[order]
-    ring_start = np.searchsorted(batch.ring_geom, np.arange(batch.n_geoms + 1))
-    # same contiguous-range trick for the AOI side: geom_rings(u) is an
-    # O(n_rings) scan, which per unique AOI would make the loop
-    # O(uniques x rings) — searchsorted once gives each AOI's ring
-    # range in O(log)
-    ab_ring_start = np.searchsorted(ab.ring_geom, np.arange(ab.n_geoms + 1))
-    bounds = np.searchsorted(sorted_codes, np.arange(len(uniques) + 1))
-    for u in range(len(uniques)):
-        lo, hi = bounds[u], bounds[u + 1]
-        if lo == hi or ab.gtype[u] == -1:
-            continue
-        idx = order[lo:hi]  # ascending (stable sort) — _gather_batch needs it
-        rings = [
-            (ab.ring(j), bool(ab.ring_is_hole[j]))
-            for j in range(ab_ring_start[u], ab_ring_start[u + 1])
-        ]
-        if not rings:
-            continue
-        sub = _gather_batch(batch, idx, ring_start)
-        m = kernel(sub, rings)
-        m[sub.gtype == -1] = False
-        out[idx] = m
-    return out
-
-
-def make_within_pairs_skip():
-    """ST_Within per row pair with an interior-cell FAST PATH: rows whose
-    ``skip`` flag is set (doc bbox inside a cover cell that lies strictly
-    inside the AOI — established natively before this eval) are TRUE with
-    no parse and no raycast; only boundary-cell candidates pay the exact
-    kernel. The caller blanks both WKT columns for skip rows so their
-    bytes don't cross the Arrow boundary either."""
-
-    @F.pandas_udf(BooleanType())
-    def within_pairs_skip(
-        wkt: pd.Series, aoi_wkt: pd.Series, skip: pd.Series
-    ) -> pd.Series:
-        sk = skip.fillna(False).astype(bool).to_numpy()
-        out = sk.copy()
-        rest = np.nonzero(~sk)[0]
-        if len(rest):
-            out[rest] = _pairs_eval(
-                wkt.iloc[rest].reset_index(drop=True),
-                aoi_wkt.iloc[rest].reset_index(drop=True),
-                kernels.within_mask,
-            )
-        return pd.Series(out)
-
-    return within_pairs_skip
-
-
 def make_cell_interior():
     """Factory: pandas UDF classifying (AOI wkt, cover-cell rect) pairs as
     INTERIOR — the rect lies strictly inside the AOI polygon
@@ -359,8 +271,8 @@ def make_cell_interior():
     meets the rect, holes respected), so any geometry wholly inside the
     rect is ST_Within the AOI without an exact test. Runs on the AOI side
     of the big join (rows = AOI x cover cells — orders of magnitude
-    smaller than the doc side); AOIs grouped per batch so each parses
-    once. Reference analogue: the coarse-filter/exact-refine split of
+    smaller than the doc side); AOIs grouped per batch by the refine's
+    grouping loop (:func:`_aoi_groups`) so each parses once. Reference analogue: the coarse-filter/exact-refine split of
     download_buildings.py:246-250."""
 
     @F.pandas_udf(BooleanType())
@@ -371,105 +283,15 @@ def make_cell_interior():
         ce: pd.Series,
         cn: pd.Series,
     ) -> pd.Series:
-        n = len(aoi_wkt)
-        out = np.zeros(n, dtype=bool)
-        if n == 0:
-            return pd.Series(out)
-        codes, uniques = pd.factorize(aoi_wkt)
-        ab = parse_wkt_batch(pd.Series(list(uniques), dtype=object))
-        ab_ring_start = np.searchsorted(ab.ring_geom, np.arange(ab.n_geoms + 1))
-        rects = np.stack(
-            [
-                cw.to_numpy(dtype=np.float64),
-                cs.to_numpy(dtype=np.float64),
-                ce.to_numpy(dtype=np.float64),
-                cn.to_numpy(dtype=np.float64),
-            ],
-            axis=1,
-        )
-        order = np.argsort(codes, kind="stable")
-        sorted_codes = codes[order]
-        bounds = np.searchsorted(sorted_codes, np.arange(len(uniques) + 1))
-        for u in range(len(uniques)):
-            lo, hi = bounds[u], bounds[u + 1]
-            if lo == hi or ab.gtype[u] == -1:
-                continue
-            idx = order[lo:hi]
-            rings = [
-                (ab.ring(j), bool(ab.ring_is_hole[j]))
-                for j in range(ab_ring_start[u], ab_ring_start[u + 1])
-            ]
-            if not rings:
-                continue
+        rects = np.stack([c.to_numpy(dtype=np.float64) for c in (cw, cs, ce, cn)], axis=1)
+        out = np.zeros(len(aoi_wkt), dtype=bool)
+        for idx, rings in _aoi_groups(aoi_wkt, _wkt_rings):
             out[idx] = kernels.rects_in_interior(rings, rects[idx])
         return pd.Series(out)
 
     # pure, but marked nondeterministic to pin the plan: downstream
     # references (the skip expression) must not split this into two evals
     return cell_interior.asNondeterministic()
-
-
-def make_within_pairs():
-    """ST_Within per row pair — see :func:`make_pair_predicate`."""
-    return make_pair_predicate(kernels.within_mask)
-
-
-def _gather_batch(batch, idx: np.ndarray, ring_start: np.ndarray):
-    """GeomBatch restricted to sorted geometry indices ``idx`` in O(selected)
-    (vs :func:`_subset_batch`'s O(batch) np.isin): ``ring_geom`` is ascending
-    by construction (parsers emit geoms in order), so geom g's rings occupy
-    the contiguous range [ring_start[g], ring_start[g+1])."""
-    from .geo.wkt import GeomBatch
-
-    idx = np.asarray(idx, dtype=np.int64)
-    starts = ring_start[idx]
-    counts = ring_start[idx + 1] - starts
-    total = int(counts.sum())
-    if total:
-        roff = np.concatenate([[0], np.cumsum(counts)[:-1]])
-        ring_idx = np.repeat(starts - roff, counts) + np.arange(total)
-    else:
-        ring_idx = np.empty(0, dtype=np.int64)
-    sizes = np.diff(batch.ring_offsets)
-    ksizes = sizes[ring_idx]
-    ncoords = int(ksizes.sum())
-    if ncoords:
-        cstarts = batch.ring_offsets[ring_idx]
-        coff = np.concatenate([[0], np.cumsum(ksizes)[:-1]])
-        coord_idx = np.repeat(cstarts - coff, ksizes) + np.arange(ncoords)
-        coords = batch.coords[coord_idx]
-    else:
-        coords = batch.coords[:0]
-    offsets = np.concatenate([[0], np.cumsum(ksizes)]).astype(np.int64)
-    return GeomBatch(
-        coords=coords,
-        ring_offsets=offsets,
-        ring_geom=np.repeat(np.arange(len(idx), dtype=np.int32), counts),
-        ring_is_hole=batch.ring_is_hole[ring_idx],
-        gtype=batch.gtype[idx],
-    )
-
-
-def _subset_batch(batch, idx: np.ndarray):
-    """GeomBatch restricted to geometry indices ``idx`` (sorted, order
-    preserved) — fully vectorized gather, no per-ring Python."""
-    from .geo.wkt import GeomBatch
-
-    idx = np.asarray(idx, dtype=np.int64)
-    keep_ring = np.isin(batch.ring_geom, idx)
-    sizes = np.diff(batch.ring_offsets)
-    coord_mask = np.repeat(keep_ring, sizes)
-    coords = batch.coords[coord_mask]
-    kept_sizes = sizes[keep_ring]
-    offsets = np.concatenate([[0], np.cumsum(kept_sizes)])
-    ring_geom = np.searchsorted(idx, batch.ring_geom[keep_ring]).astype(np.int32)
-    return GeomBatch(
-        coords=coords,
-        ring_offsets=offsets.astype(np.int64),
-        ring_geom=ring_geom,
-        ring_is_hole=batch.ring_is_hole[keep_ring],
-        gtype=batch.gtype[idx],
-    )
 
 
 @F.pandas_udf(StringType())

@@ -24,6 +24,8 @@ sys.path.insert(0, REPO)
 QUERIES = [
     "g_aoi_query",
     "g_aoi_table",
+    "g_multi_aoi",
+    "g_sql_aoi",
     "g_big_aoi_join",
     "g_knn_join",
     "g_s2_scan",

@@ -407,22 +407,23 @@ def test_malformed_simple_row_degrades_alone():
 
 def test_degenerate_rectangle_ring_is_not_a_rect():
     """A closed 5-vertex ring whose vertices all sit on bbox corners but
-    visit only three of them (zero area) is not a rectangle: both twins of
-    the predicate reject it, so the rect fast path of ``intersects_mask``
-    cannot admit a point the exact kernel rejects."""
-    from open_buildings_spark import udfs
+    visit only three of them (zero area) is not a rectangle: the one
+    rectangle predicate rejects it, so the rect fast path of
+    ``intersects_mask`` cannot admit a point the exact kernel rejects."""
+    from open_buildings_spark.geo.wkt import rings_batch
 
     wkt = "POLYGON((0 0,2 0,2 1,2 0,0 0))"
     ring = np.array([[0, 0], [2, 0], [2, 1], [2, 0], [0, 0]], dtype=np.float64)
-    assert kernels.rings_rect([(ring, False)]) is None
-    assert not udfs.rect_rings_mask(parse_wkt_batch(pd.Series([wkt])))[0]
+    assert not kernels.rect_mask(rings_batch([(ring, False)]))[0]
+    assert not kernels.rect_mask(parse_wkt_batch(pd.Series([wkt])))[0]
     centre = parse_wkt_batch(pd.Series(["POINT (1 0.5)"]))
     assert kernels.intersects_mask(centre, [(ring, False)])[0] == (
         kernels._intersects_exact(centre, [(ring, False)])[0]
     )
-    # a real rectangle still takes both fast paths
+    # a real rectangle still takes the fast path, written either way
     rect = np.array([[0, 0], [2, 0], [2, 1], [0, 1], [0, 0]], dtype=np.float64)
-    assert kernels.rings_rect([(rect, False)]) == (0.0, 0.0, 2.0, 1.0)
-    assert udfs.rect_rings_mask(
-        parse_wkt_batch(pd.Series(["POLYGON((0 0,2 0,2 1,0 1,0 0))"]))
-    )[0]
+    assert kernels.rect_mask(rings_batch([(rect, False)]))[0]
+    assert list(kernels.rect_mask(parse_wkt_batch(pd.Series([
+        "POLYGON((0 0,2 0,2 1,0 1,0 0))",
+        "MULTIPOLYGON(((0 0,2 0,2 1,0 1,0 0)))",
+    ])))) == [True, True]

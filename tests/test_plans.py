@@ -288,3 +288,36 @@ def test_lm_score_broadcast_gated_by_model_size(spark):
         assert "TakeOrderedAndProject" in pruned
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_aoi_refine_python_eval_counts(spark, docs, tmp_path):
+    """The one refine UDF adds no Python eval node to any AOI path: the
+    raw AOI query and the broadcast AOI join pay one enrichment pass plus
+    one refine, the stored-table paths only the refine. A second refine
+    node (a pushed filter splitting the eval, or a per-AOI UDF) means
+    every candidate crosses the Arrow boundary twice."""
+    import re
+
+    from open_buildings_spark import datagen
+    from open_buildings_spark.operators import aoi as aoi_op
+    from open_buildings_spark.operators import spatial_join
+
+    from tests.fixtures import LONDON_TILE_FEATURE
+
+    def evals(df):
+        return len(re.findall(
+            r"^\(\d+\) (MapInArrow|ArrowEvalPython|BatchEvalPython|MapInPandas)",
+            plan_of(df),
+            re.M,
+        ))
+
+    aois = [(1, datagen.city_aoi()), (2, LONDON_TILE_FEATURE)]
+    root = str(tmp_path / "tbl")
+    tbl.write_partitioned(
+        enrich.add_geo_columns(docs, drop_nongeo=True), root, max_per_file=5000
+    )
+    table = tbl.read_table(spark, root)
+    assert evals(aoi_op.aoi_query(docs, datagen.city_aoi())) == 2
+    assert evals(spatial_join.aoi_join(docs, aois)) == 2
+    assert evals(aoi_op.aoi_query(table, datagen.city_aoi())) == 1
+    assert evals(spatial_join.aoi_join(table, aois)) == 1

@@ -1133,19 +1133,28 @@ def test_rect_aoi_native_witness_bypasses_refine(spark):
         "doc_id string, quadkey string, wkt string, "
         "minx double, miny double, maxx double, maxy double",
     )
-    aois = spark.createDataFrame([(1, rect_wkt)], "aoi_id int, wkt string")
-    got_big = {
-        r["doc_id"]
-        for r in spatial_join.aoi_join_big(docs, aois, cover_level=12)
-        .select("doc_id").collect()
+    # the same rectangle written as a one-part MULTIPOLYGON is a
+    # rectangle too, on both paths
+    ring = [[W, S], [E, S], [E, N], [W, N], [W, S]]
+    multi_wkt = f"MULTIPOLYGON ((({W} {S}, {E} {S}, {E} {N}, {W} {N}, {W} {S})))"
+    multi_feat = {
+        "type": "Feature", "properties": {},
+        "geometry": {"type": "MultiPolygon", "coordinates": [[ring]]},
     }
-    assert got_big == {"rect-skip"}
-    got_small = {
-        r["doc_id"]
-        for r in spatial_join.aoi_join(docs, [(1, rect_feat)], cover_level=12)
-        .select("doc_id").collect()
-    }
-    assert got_small == {"rect-skip"}
+    for wkt, feat in ((rect_wkt, rect_feat), (multi_wkt, multi_feat)):
+        aois = spark.createDataFrame([(1, wkt)], "aoi_id int, wkt string")
+        got_big = {
+            r["doc_id"]
+            for r in spatial_join.aoi_join_big(docs, aois, cover_level=12)
+            .select("doc_id").collect()
+        }
+        assert got_big == {"rect-skip"}, wkt
+        got_small = {
+            r["doc_id"]
+            for r in spatial_join.aoi_join(docs, [(1, feat)], cover_level=12)
+            .select("doc_id").collect()
+        }
+        assert got_small == {"rect-skip"}, wkt
     # pentagon: not a rectangle -> the garbage rows are parsed and dropped
     p_aois = spark.createDataFrame([(1, penta_wkt)], "aoi_id int, wkt string")
     got_penta = {
@@ -1154,7 +1163,10 @@ def test_rect_aoi_native_witness_bypasses_refine(spark):
         .select("doc_id").collect()
     }
     assert got_penta == set()
-    assert spatial_join.feature_rect(rect_feat["geometry"]) == (W, S, E, N)
-    penta_geo = {"type": "Polygon", "coordinates": [
-        [[W, S], [mid, S], [E, S], [E, N], [W, N], [W, S]]]}
-    assert spatial_join.feature_rect(penta_geo) is None
+    # driver-side classification: rect flag + the rect as the AOI bbox
+    penta_feat = {"type": "Feature", "properties": {}, "geometry": {
+        "type": "Polygon", "coordinates": [
+            [[W, S], [mid, S], [E, S], [E, N], [W, N], [W, S]]]}}
+    for feat, arect in ((rect_feat, True), (multi_feat, True), (penta_feat, False)):
+        (row, *_) = spatial_join.classified_cover_cells([(1, feat)], 12)
+        assert row[7:] == (arect, W, S, E, N)
