@@ -205,14 +205,3 @@ def tag_cells(
     exploded = df.withColumn("cell", F.explode(prefixes))
     return exploded.join(F.broadcast(plan), on=[*keys, "cell"], how="inner")
 
-
-def apply_partition_plan(
-    df: DataFrame, plan: DataFrame, keys: list[str] | None = None
-) -> DataFrame:
-    """Tag each row with its leaf cell (broadcast hash join via
-    :func:`tag_cells`) and return the DataFrame hash-partitioned by cell,
-    quadkey-sorted within partitions — the reference's `ORDER BY quadkey`
-    clustered write (overture/partition.py:149,182) without a global sort."""
-    keys = keys or []
-    tagged = tag_cells(df, plan.select(*keys, "cell"), keys)
-    return tagged.repartition(F.col("cell")).sortWithinPartitions("quadkey")

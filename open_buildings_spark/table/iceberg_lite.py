@@ -5,8 +5,15 @@ Iceberg semantics the north_rule needs, over plain ``spark.read/write.parquet``:
 
 - **snapshots**: ``metadata/v{N}.json`` manifests, each listing data files
   with per-file partition values, row counts and quadkey bounds;
-- **atomic commit**: manifest written to a temp file then ``os.replace``'d,
-  then the ``VERSION`` pointer swapped the same way (single-writer);
+- **no-clobber commit**: every write builds its snapshot with
+  :func:`_next_snapshot` and publishes it with :func:`_commit_manifest`,
+  which creates ``v{N}.json`` only if no other writer has (a hard link of a
+  fully written temp file); the publish is the commit point, and a writer
+  that lost the race gets :class:`CommitConflict`, never a silently
+  replaced snapshot. ``VERSION`` is only a hint readers step forward from;
+- **one cell writer**: every data file is written by
+  :func:`_write_cells_salted` — Spark's partitioned parquet writer into
+  hive ``<k>=<v>/cell=<c>`` directories, quadkey-sorted within files;
 - **partition pruning**: readers plan the file list from the manifest
   (quadkey-prefix and key-equality predicates) before Spark ever lists
   a directory — the reference gets this from hive partitioning + quadkey
@@ -25,6 +32,7 @@ import glob
 import json
 import os
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,28 +52,64 @@ def _version_file(root: str) -> str:
     return os.path.join(_meta_dir(root), "VERSION")
 
 
+class CommitConflict(RuntimeError):
+    """Another writer committed the snapshot this write was built on top
+    of; re-read the table and redo the write."""
+
+
+def _manifest_path(root: str, snapshot_id: int) -> str:
+    return os.path.join(_meta_dir(root), f"v{snapshot_id}.json")
+
+
 def current_manifest(root: str) -> dict | None:
-    vf = _version_file(root)
-    if not os.path.exists(vf):
-        return None
-    with open(vf) as f:
-        v = f.read().strip()
-    with open(os.path.join(_meta_dir(root), v)) as f:
-        return json.load(f)
+    """The newest committed snapshot: the ``VERSION`` hint, stepped forward
+    while a later manifest exists — a writer can die between publishing its
+    manifest (the commit) and moving the hint. A hint whose manifest was
+    expired falls back to the newest one on disk."""
+    try:
+        with open(_version_file(root)) as f:
+            sid = int(f.read().strip()[1 : -len(".json")])
+    except FileNotFoundError:
+        sid = 0
+    if not os.path.exists(_manifest_path(root, sid)):
+        sid = max(
+            (
+                int(os.path.basename(p)[1 : -len(".json")])
+                for p in glob.glob(os.path.join(_meta_dir(root), "v*.json"))
+            ),
+            default=0,
+        )
+    while os.path.exists(_manifest_path(root, sid + 1)):
+        sid += 1
+    return manifest_at(root, sid)
 
 
 def _commit_manifest(root: str, manifest: dict) -> dict:
-    """Atomic: temp-write manifest, rename, then swap the VERSION pointer.
-    Returns the committed manifest."""
-    os.makedirs(_meta_dir(root), exist_ok=True)
-    name = f"v{manifest['snapshot_id']}.json"
-    tmp = os.path.join(_meta_dir(root), f".{name}.tmp")
-    with open(tmp, "w") as f:
+    """Publish a snapshot without overwriting: the manifest is written to a
+    writer-unique temp file and hard-linked to ``v{N}.json``, which fails if
+    another writer already committed snapshot N (raises
+    :class:`CommitConflict`; the loser's data files stay unreferenced until
+    :func:`expire_snapshots`). Then the ``VERSION`` hint moves; readers
+    step past a lagging one (:func:`current_manifest`). Returns the
+    committed manifest."""
+    meta = _meta_dir(root)
+    os.makedirs(meta, exist_ok=True)
+    sid = manifest["snapshot_id"]
+    tmp = os.path.join(meta, f".v{sid}.json.{uuid.uuid4().hex}.tmp")
+    with open(tmp, "x") as f:
         json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(_meta_dir(root), name))
-    vtmp = _version_file(root) + ".tmp"
-    with open(vtmp, "w") as f:
-        f.write(name)
+    try:
+        os.link(tmp, _manifest_path(root, sid))
+    except FileExistsError:
+        raise CommitConflict(
+            f"snapshot {sid} of table {root} was already committed by "
+            "another writer"
+        ) from None
+    finally:
+        os.remove(tmp)
+    vtmp = f"{_version_file(root)}.{uuid.uuid4().hex}.tmp"
+    with open(vtmp, "x") as f:
+        f.write(f"v{sid}.json")
     os.replace(vtmp, _version_file(root))
     return manifest
 
@@ -192,9 +236,10 @@ def write_partitioned(
 
     1. plan leaf cells (one-pass histogram, reference split semantics),
     2. skip cells already committed (resume),
-    3. tag rows with their leaf cell, hash-partition by cell, write one
-       parquet directory per cell, quadkey-sorted within files (the
-       reference's ORDER BY quadkey clustered write),
+    3. tag rows with their leaf cell and write them with the one cell
+       writer (:func:`_write_cells_salted`): one parquet directory per
+       cell, quadkey-sorted within files (the reference's ORDER BY quadkey
+       clustered write), over-cap cells salted across writer tasks,
     4. commit the manifest atomically every ``cells_per_commit`` cells
        (0 = single commit at the end).
 
@@ -220,8 +265,6 @@ def write_partitioned(
     m = current_manifest(root)
     if m is None:
         m = {
-            "snapshot_id": 0,
-            "parent_id": None,
             "keys": keys,
             "partitions": [],
             "metrics": {"rows_written": 0, "recomputed_cells": 0},
@@ -254,72 +297,26 @@ def write_partitioned(
         "schema": [f.jsonValue() for f in df.schema.fields if f.name not in keys],
     }
     spark = df.sparkSession
-    plan_schema = _plan_schema(keys, ", n_rows long")
+    plan_schema = _plan_schema(keys)
     for group in groups:
+        counts = {
+            tuple(r[k] for k in keys) + (r["cell"],): r["n_rows"] for r in group
+        }
         # Tag rows with their leaf cell via a broadcast hash equi-join on
         # quadkey-prefix = cell (tag_cells). The inner join doubles as the
         # pending-cells filter: rows of already-committed cells match no
         # plan entry and drop out. Plan size stays out of codegen — the
         # previous per-cell startswith/when chains were O(#cells) Catalyst
         # expressions, fatal at planet scale (~10^5-10^6 leaves).
-        group_df = spark.createDataFrame(
-            [tuple(r[k] for k in keys) + (r["cell"], r["n_rows"]) for r in group],
-            plan_schema,
-        )
-        sub = tag_cells(df, group_df, keys)
-        # Salted repartitioning for over-dense cells (north_rule): a z12
-        # cell denser than max_per_file cannot be split spatially any
-        # further (the reference would loop forever on it), so its rows are
-        # sharded across ceil(n/max_per_file) writer tasks by a doc-hash
-        # salt — bounding BOTH the task size (no straggler writes a
-        # megacity alone) and the output file size. Normal cells get
-        # salt 0 and behave exactly as before. n_rows rides in from the
-        # plan join, so the salt is one expression, not a per-cell chain.
-        shards = F.ceil(F.col("n_rows") / F.lit(max_per_file)).cast("int")
-        sub = sub.withColumn(
-            "_salt",
-            F.when(
-                F.col("n_rows") > max_per_file,
-                F.pmod(F.hash(F.col("doc_id")), shards),
-            ).otherwise(F.lit(0)),
-        ).drop("n_rows")
+        sub = tag_cells(df, spark.createDataFrame(list(counts), plan_schema), keys)
         # snapshot immutability: files are only ever ADDED (append mode +
         # job-unique part names); the manifest's per-cell file list is the
         # diff of the cell dir across the job, so files from an earlier
         # KILLED (uncommitted) attempt are never referenced — they sit
         # orphaned until expire_snapshots reclaims them, and every older
         # snapshot keeps reading exactly the files it committed.
-        pre_files = _list_cells(
-            data_dir, keys, [tuple(r[k] for k in keys) + (r["cell"],) for r in group]
-        )
-        # explicit partition count: ceil(rows/max_per_file) writer tasks at
-        # minimum — an explicit repartition(n, ...) is exempt from AQE
-        # partition coalescing, which would otherwise merge the salt shards
-        # right back into one oversized task
-        shuffle_parts = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        n_writers = max(shuffle_parts, -(-sum(r["n_rows"] for r in group) // max_per_file))
-        (
-            sub.repartition(
-                n_writers, F.col("cell"), F.col("_salt"), *[F.col(k) for k in keys]
-            )
-            # sort by (partition cols, quadkey): the dynamic-partition writer
-            # requires rows grouped by partition cols and would inject its
-            # own quadkey-destroying sort otherwise; this way one sort gives
-            # both the grouping and the reference's ORDER BY quadkey
-            # clustering (overture/partition.py:149,182)
-            .sortWithinPartitions(*keys, "cell", "quadkey")
-            .drop("_salt")
-            # append, never overwrite: Spark's dynamic-partition overwrite
-            # would delete the files older snapshots reference (in-place
-            # rewrite broke time travel across resumes); part names carry
-            # the job UUID so parallel/retried attempts cannot collide
-            .write.mode("append")
-            .partitionBy(*keys, "cell")
-            .option("compression", "snappy")
-            .parquet(data_dir)
-        )
+        pre_files = _list_cells(data_dir, keys, counts)
+        _write_cells_salted(sub, counts, max_per_file, data_dir, keys)
         is_final_group = group is groups[-1]
         m = _next_snapshot(
             spark,
@@ -330,7 +327,7 @@ def write_partitioned(
             metrics={
                 **m["metrics"],
                 "rows_written": m["metrics"]["rows_written"]
-                + sum(r["n_rows"] for r in group),
+                + sum(counts.values()),
                 "recomputed_cells": m["metrics"]["recomputed_cells"] + len(group),
                 "max_per_file": max_per_file,
                 # final commit only: a partially-committed build must not
@@ -385,7 +382,7 @@ def _list_cells(data_dir: str, keys: list[str], cks) -> dict[tuple, set]:
 
 
 def _next_snapshot(
-    spark: SparkSession,
+    spark: SparkSession | None,
     root: str,
     m: dict,
     pre_files: dict[tuple, set],
@@ -395,7 +392,9 @@ def _next_snapshot(
 ) -> dict:
     """The snapshot after a write into the cells of ``pre_files`` (each
     touched (key values..., cell) -> the files its directory held before
-    the write) — the one commit path of every cell write.
+    the write) — the one snapshot builder: every commit's manifest, and its
+    ``snapshot_id``/``parent_id``, comes from here (a metadata-only change
+    such as :func:`add_column` touches no cell and needs no ``spark``).
 
     The files each cell gained are listed once and their footers read in
     one batched pass (a Spark job past :func:`_rows_per_file`'s threshold,
@@ -442,10 +441,11 @@ def _next_snapshot(
     tracked = m["metrics"].get("max_anchor_offset_m")
     if anchor is not None and tracked is not None and any(new.values()):
         metrics["max_anchor_offset_m"] = max(tracked, anchor)
+    base = m.get("snapshot_id", 0)  # 0: the table has no snapshot yet
     return {
         **{k: v for k, v in m.items() if k in ("schema", "keys")},
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent_id": m["snapshot_id"],
+        "snapshot_id": base + 1,
+        "parent_id": base,
         "partitions": parts,
         "metrics": metrics,
     }
@@ -659,56 +659,66 @@ def _plan_schema(keys: list[str], extra: str = "") -> str:
 
 def _write_cells_salted(
     df: DataFrame,
-    counts: dict,
+    counts: dict | None,
     cap: int | None,
     data_dir: str,
     keys: list[str] | None = None,
 ) -> None:
-    """Append tagged rows into hive ``<k>=<v>/cell=<c>`` dirs honoring the
-    per-file row cap via the same data-driven salting as
-    ``write_partitioned``: partitions over the cap shard into ceil(n/cap)
-    doc-hash buckets so no single writer task (and no expected output file)
-    exceeds the cap — without it, repartition-by-cell funnels a dense
-    cell's whole append into ONE task and one oversized file. Shared by
-    :func:`append_rows`, :func:`upsert_rows` and :func:`delete_rows`
-    (rows must carry ``doc_id`` for the salt). ``counts`` is keyed by
-    (key values..., cell) tuples."""
+    """The one cell writer: append rows tagged with ``cell`` into hive
+    ``<k>=<v>/cell=<c>`` directories through Spark's partitioned parquet
+    writer, quadkey-sorted within each file (the reference's ORDER BY
+    quadkey clustered write, overture/partition.py:149,182). Files are only
+    ever ADDED: append mode (a dynamic-partition overwrite would delete the
+    files older snapshots reference) and job-unique part names.
+
+    ``counts`` — rows per (key values..., cell) — salts every cell over the
+    per-file row ``cap`` (north_rule): a z12 cell denser than the cap cannot
+    split spatially any further, so its rows shard across ceil(n/cap)
+    writer tasks by ``pmod(hash(doc_id), ceil(n/cap))``, bounding both the
+    task size (no straggler writes a megacity alone) and the expected file
+    size; other cells get salt 0 and one task each. Rows must carry
+    ``doc_id``. Without ``counts`` (compaction, which rewrites whole cells)
+    nothing is salted: each cell is written by ONE task that rolls a new
+    file every ``cap`` rows, so it comes out as exactly ceil(n/cap) files.
+
+    Tasks: max(spark.sql.shuffle.partitions, ceil(rows/cap)) through an
+    explicit ``repartition(n, ...)``, which AQE never coalesces (it would
+    merge the salt shards right back into one oversized task)."""
     keys = keys or []
     spark = df.sparkSession
-    on = [*keys, "cell"]
-    if cap:
-        over = [(*ck, -(-n // cap)) for ck, n in counts.items() if n > cap]
-        if over:
-            shards_df = _broadcast_rows(
-                spark, over, _plan_schema(keys, ", _shards int")
-            )
-            df = (
-                df.join(shards_df, on, "left")
-                .withColumn(
-                    "_salt",
-                    F.when(
-                        F.col("_shards").isNotNull(),
-                        F.pmod(F.hash(F.col("doc_id")), F.col("_shards")),
-                    ).otherwise(F.lit(0)),
-                )
-                .drop("_shards")
-            )
-        else:
-            df = df.withColumn("_salt", F.lit(0))
-        n_writers = max(1, -(-sum(counts.values()) // cap))
-        df = df.repartition(
-            n_writers, F.col("cell"), F.col("_salt"), *[F.col(k) for k in keys]
-        ).drop("_salt")
+    roll = bool(cap) and counts is None
+    counts = counts or {}
+    over = [(*ck, -(-n // cap)) for ck, n in counts.items() if cap and n > cap]
+    if over:
+        shards = _broadcast_rows(spark, over, _plan_schema(keys, ", _shards int"))
+        salt = F.when(
+            F.col("_shards").isNotNull(),
+            F.pmod(F.hash(F.col("doc_id")), F.col("_shards")),
+        ).otherwise(F.lit(0))
+        df = (
+            df.join(shards, [*keys, "cell"], "left")
+            .withColumn("_salt", salt)
+            .drop("_shards")
+        )
     else:
-        n_writers = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        df = df.repartition(n_writers, F.col("cell"), *[F.col(k) for k in keys])
-    (
-        df.sortWithinPartitions(*keys, "cell", "quadkey")
-        .write.mode("append")
-        .partitionBy(*keys, "cell")
-        .option("compression", "snappy")
-        .parquet(data_dir)
+        df = df.withColumn("_salt", F.lit(0))
+    n_writers = max(
+        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
+        -(-sum(counts.values()) // cap) if cap else 0,
     )
+    writer = (
+        df.repartition(n_writers, F.col("cell"), F.col("_salt"), *map(F.col, keys))
+        .drop("_salt")
+        # sorting by (partition cols, quadkey) gives the dynamic-partition
+        # writer its required grouping (it would otherwise inject its own
+        # quadkey-destroying sort) and the quadkey clustering in one sort
+        .sortWithinPartitions(*keys, "cell", "quadkey")
+        .write.mode("append")
+        .option("compression", "snappy")
+    )
+    if roll:
+        writer = writer.option("maxRecordsPerFile", cap)
+    writer.partitionBy(*keys, "cell").parquet(data_dir)
 
 
 def _read_partitions(
@@ -1020,25 +1030,27 @@ def read_table(
         if any(part["values"].get(k) != v for k, v in key_filters.items()):
             continue
         files.extend(os.path.join(root, f) for f in part["files"])
+    return _scan(spark, root, m, files)
+
+
+def _scan(spark: SparkSession, root: str, m: dict, files: list[str]) -> DataFrame:
+    """Scan of a snapshot's planned ``files`` with the snapshot's schema.
+    Keyed tables recover their key values from the directory names
+    (:func:`_keyed_reader`, never inference). An empty plan reads zero rows
+    of the whole table, so the schema survives."""
     keys = _manifest_keys(m)
     if keys:
-        # keyed table: key values live in directory names, recovered via
-        # basePath + explicit string schema (never inference)
         reader = _keyed_reader(spark, m, keys, root)
-        if not files:
-            allf = [
-                os.path.join(root, f) for p in m["partitions"] for f in p["files"]
-            ]
-            return reader.parquet(*allf).limit(0).drop("cell")
-        return reader.parquet(*files).drop("cell")
-    reader = spark.read
-    if m.get("schema"):
-        reader = reader.schema(_schema_struct(m))
-    if not files:
-        # preserve schema by reading zero rows from the full table
+    else:
+        reader = spark.read
+        if m.get("schema"):
+            reader = reader.schema(_schema_struct(m))
+    if files:
+        df = reader.parquet(*files)
+    else:
         allf = [os.path.join(root, f) for p in m["partitions"] for f in p["files"]]
-        return reader.parquet(*allf).limit(0)
-    return reader.parquet(*files)
+        df = reader.parquet(*allf).limit(0)
+    return df.drop("cell") if keys else df
 
 
 def _schema_struct(manifest: dict):
@@ -1063,14 +1075,10 @@ def add_column(root: str, name: str, dtype: str) -> dict:
     if any(f["name"] == name for f in m["schema"]):
         raise ValueError(f"column {name!r} already exists")
     field = StructField(name, _parse_datatype_string(dtype), True)
-    m2 = {
-        **m,
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent_id": m["snapshot_id"],
-        "schema": m["schema"] + [field.jsonValue()],
-    }
-    _commit_manifest(root, m2)
-    return m2
+    widened = {**m, "schema": m["schema"] + [field.jsonValue()]}
+    return _commit_manifest(
+        root, _next_snapshot(None, root, widened, {}, set(), m["metrics"])
+    )
 
 
 def read_table_cells(
@@ -1094,22 +1102,7 @@ def read_table_cells(
         # whose prefix is a requested cell)
         if pc in want or any(pc[:k] in cellset for k in range(1, len(pc) + 1)):
             files.extend(os.path.join(root, f) for f in part["files"])
-    keys = _manifest_keys(m)
-    if keys:
-        reader = _keyed_reader(spark, m, keys, root)
-        if not files:
-            allf = [
-                os.path.join(root, f) for p in m["partitions"] for f in p["files"]
-            ]
-            return reader.parquet(*allf).limit(0).drop("cell")
-        return reader.parquet(*files).drop("cell")
-    reader = spark.read
-    if m.get("schema"):
-        reader = reader.schema(_schema_struct(m))
-    if not files:
-        allf = [os.path.join(root, f) for p in m["partitions"] for f in p["files"]]
-        return reader.parquet(*allf).limit(0)
-    return reader.parquet(*files)
+    return _scan(spark, root, m, files)
 
 
 def metrics(root: str) -> dict:
@@ -1153,26 +1146,26 @@ def compact_cells(
     Output files respect the table's north_rule row cap: by default the
     writer's ``max_per_file`` (stored in the manifest) re-shards compaction
     output at that many rows per file, so an over-dense salted cell is
-    NEVER collapsed back into one oversized file/task — a cell whose file
-    count already equals its required shard count is skipped entirely.
+    NEVER collapsed back into one oversized file — a cell whose file count
+    already equals its required shard count is skipped entirely.
     ``max_rows_per_file`` overrides the cap (None + no stored cap = one
     file per cell).
 
-    Scale shape: candidate cells compact in parallel (repartition on
-    (keys, cell), one pyarrow writer per task walking its partitions in
-    clustered order); the driver only swaps manifest entries. Streaming
-    ingests that append many micro-batch files per cell are the intended
-    caller. Keyed tables compact the same way — key columns are recovered
-    from the hive directory names and written back as directories, never
-    as data columns.
+    Scale shape: the selected cells are read with their key values and
+    ``cell`` from the hive directories and rewritten by the one cell writer
+    (:func:`_write_cells_salted`) unsalted — one task per cell, rolling a
+    new file every ``cap`` rows, so each cell comes out as exactly
+    ceil(n/cap) quadkey-sorted files; the commit is :func:`_next_snapshot`
+    over the rewritten cells. Before it commits, every rewritten cell's
+    footer row count must equal its prior ``n_rows``. Streaming ingests
+    that append many micro-batch files per cell are the intended caller.
+    Keyed tables compact the same way — key columns are written back as
+    directories, never as data columns.
 
     Selection is per FILE where the manifest records ``file_rows``: a cell
     whose file count looks right but holds one skewed over-cap file (e.g.
     999+1 rows at cap 500) is still selected and re-sharded.
     """
-    import pyarrow as pa
-    from pyspark import TaskContext
-
     m = current_manifest(root)
     if m is None:
         raise FileNotFoundError(f"no committed snapshot at {root}")
@@ -1200,142 +1193,29 @@ def compact_cells(
     ]
     if not todo:
         return m
-    snap = m["snapshot_id"] + 1
     data_dir = os.path.join(root, "data")
-    tagged = (
-        _read_partitions(spark, root, m, todo)
-        .repartition(max(len(todo), 1), *keys, "cell")
-        .sortWithinPartitions(*keys, "cell", "quadkey")
+    cks = {_part_key(p, keys): p["n_rows"] for p in todo}
+    pre_files = _list_cells(data_dir, keys, cks)
+    # no counts: whole cells, unsalted, each rolled at the cap by one task
+    _write_cells_salted(
+        _read_partitions(spark, root, m, todo), None, cap, data_dir, keys
     )
-
-    def write_part(batches):
-        import pyarrow.parquet as pq
-
-        tc = TaskContext.get()
-        out_rows = []
-        writer = None
-        cur = None  # (key values..., cell) of the open group
-        fname = None  # output path relative to data_dir
-        n = 0
-        seq = 0
-
-        def close():
-            nonlocal writer, n, fname
-            if writer is not None:
-                writer.close()
-                final = os.path.join(data_dir, fname)
-                os.replace(
-                    os.path.join(
-                        os.path.dirname(final),
-                        "." + os.path.basename(final) + ".inprogress",
-                    ),
-                    final,
-                )
-                out_rows.append((cur, fname, n))
-                writer, n, fname = None, 0, None
-
-        def open_file(schema):
-            nonlocal writer, fname, seq
-            seq += 1
-            pdir = _part_dir(data_dir, keys, dict(zip(keys, cur)), cur[-1])
-            os.makedirs(pdir, exist_ok=True)
-            base = (
-                f"compact-{snap}-{cur[-1] or 'root'}-"
-                f"{tc.partitionId()}-{tc.taskAttemptId()}-{seq}.parquet"
-            )
-            fname = os.path.relpath(os.path.join(pdir, base), data_dir)
-            writer = pq.ParquetWriter(
-                os.path.join(pdir, "." + base + ".inprogress"),
-                schema,
-                compression="snappy",
-            )
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            names = rb.schema.names
-            gidx = [names.index(k) for k in keys] + [names.index("cell")]
-            gset = set(gidx)
-            groups = list(zip(*[rb.column(j).to_pylist() for j in gidx]))
-            start = 0
-            for i in range(len(groups) + 1):
-                if i < len(groups) and groups[i] == groups[start]:
-                    continue
-                piece = rb.slice(start, i - start)
-                if cur != groups[start]:
-                    close()
-                    cur = groups[start]
-                arrays = [
-                    piece.column(j)
-                    for j in range(piece.num_columns)
-                    if j not in gset
-                ]
-                out = pa.record_batch(
-                    arrays,
-                    names=[nm for j, nm in enumerate(names) if j not in gset],
-                )
-                # roll files at the row cap (north_rule: no oversized
-                # output file, even when one task compacts a dense cell)
-                off = 0
-                while off < out.num_rows:
-                    if writer is None:
-                        open_file(out.schema)
-                    take = (
-                        out.num_rows - off
-                        if not cap
-                        else min(cap - n, out.num_rows - off)
-                    )
-                    writer.write_batch(out.slice(off, take))
-                    n += take
-                    off += take
-                    if cap and n >= cap:
-                        close()
-                start = i
-        close()
-        for grp, f, cnt in out_rows:
-            yield pa.record_batch(
-                [pa.array([v]) for v in grp]
-                + [pa.array([f]), pa.array([cnt], type=pa.int64())],
-                names=[*keys, "cell", "file", "n_rows"],
-            )
-
-    results = tagged.mapInArrow(
-        write_part, _plan_schema(keys, ", file string, n_rows long")
-    ).collect()
-    new_files: dict[tuple, list] = {}
-    for r in results:
-        ck = tuple(r[k] for k in keys) + (r["cell"],)
-        new_files.setdefault(ck, []).append(
-            (os.path.join("data", r["file"]), r["n_rows"])
-        )
-    # sanity: compaction must preserve row counts per partition
-    for p in todo:
-        ck = _part_key(p, keys)
-        got = sum(n for _, n in new_files.get(ck, []))
-        assert got == p["n_rows"], (ck, got, p["n_rows"])
-    parts = []
-    for p in m["partitions"]:
-        ck = _part_key(p, keys)
-        if ck in new_files:
-            pairs = sorted(new_files[ck])
-            parts.append(
-                {
-                    **p,
-                    "files": [f for f, _ in pairs],
-                    "file_rows": [n for _, n in pairs],
-                }
-            )
-        else:
-            parts.append(p)
-    m2 = {
-        **{k: v for k, v in m.items() if k in ("schema", "keys")},
-        "snapshot_id": snap,
-        "parent_id": m["snapshot_id"],
-        "partitions": parts,
-        "metrics": {**m["metrics"], "compacted_cells": len(todo)},
+    m2 = _next_snapshot(
+        spark, root, m, pre_files, set(cks),
+        {**m["metrics"], "compacted_cells": len(todo)},
+    )
+    # safety: a rewrite must keep every cell's rows (footer counts, checked
+    # before anything becomes visible)
+    after = {_part_key(p, keys): p["n_rows"] for p in m2["partitions"]}
+    lost = {
+        ck: (n, after.get(ck, 0)) for ck, n in cks.items() if after.get(ck, 0) != n
     }
-    _commit_manifest(root, m2)
-    return m2
+    if lost:
+        raise RuntimeError(
+            f"compaction of {root} changed row counts, (before, after) per "
+            f"cell: {lost}"
+        )
+    return _commit_manifest(root, m2)
 
 
 def expire_snapshots(root: str, keep_last: int = 1) -> int:

@@ -123,7 +123,7 @@ def test_partition_plan_respects_cap_and_total(spark, docs):
 def test_partition_plan_rows_land_in_their_cell(spark, docs):
     g = enrich.add_geo_columns(docs, drop_nongeo=True)
     plan = partition.partition_plan(g, 500)
-    tagged = partition.apply_partition_plan(g, plan)
+    tagged = partition.tag_cells(g, plan.select("cell"))
     assert tagged.filter(F.col("cell").isNull()).count() == 0
     bad = tagged.filter(~F.col("quadkey").startswith(F.col("cell"))).count()
     assert bad == 0

@@ -1,7 +1,11 @@
 """Iceberg-lite table layer: atomic snapshots, partition pruning, resume."""
 
+import itertools
 import os
+import sys
+import threading
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -233,7 +237,8 @@ def test_compaction_time_travel_and_expiry(spark, enriched, tmp_path):
         for p in m1["partitions"]
         if len(p["files"]) == needed(p, 50)
     }
-    tbl.compact_cells(spark, root)
+    _, jobs = _job_count(spark, lambda: tbl.compact_cells(spark, root))
+    assert jobs <= 3
     base = tbl.current_manifest(root)
     for p in base["partitions"]:
         if p["cell"] in ok_before:
@@ -248,7 +253,11 @@ def test_compaction_time_travel_and_expiry(spark, enriched, tmp_path):
         if len(p["files"]) > max(1, needed(p, cap))
         or len(p["files"]) < needed(p, cap)
     ]
-    m2 = tbl.compact_cells(spark, root, max_files=1, max_rows_per_file=cap)
+    m2, jobs = _job_count(
+        spark,
+        lambda: tbl.compact_cells(spark, root, max_files=1, max_rows_per_file=cap),
+    )
+    assert jobs <= 3  # list the selected files, shuffle, write
     assert m2["snapshot_id"] == base["snapshot_id"] + 1
     assert m2["metrics"]["compacted_cells"] == len(expect)
     for p in m2["partitions"]:
@@ -264,11 +273,13 @@ def test_compaction_time_travel_and_expiry(spark, enriched, tmp_path):
     old = tbl.read_table(spark, root, snapshot_id=m1["snapshot_id"])
     assert old.count() == total
     assert len(old.inputFiles()) == n_files_before
-    # compacted files keep the quadkey clustering
-    comp = [f for p in m2["partitions"] for f in p["files"] if "compact-" in f]
+    # compacted files (the ones m2 adds over base) keep the quadkey clustering
+    base_files = {f for p in base["partitions"] for f in p["files"]}
+    comp = [f for p in m2["partitions"] for f in p["files"] if f not in base_files]
     assert comp
-    pdf = spark.read.parquet(os.path.join(root, comp[0])).select("quadkey").toPandas()
-    assert (pdf.quadkey.sort_values().values == pdf.quadkey.values).all()
+    for f in comp:
+        qk = pq.read_table(os.path.join(root, f), columns=["quadkey"])["quadkey"]
+        assert qk.to_pylist() == sorted(qk.to_pylist())
 
     deleted = tbl.expire_snapshots(root, keep_last=1)
     assert deleted > 0
@@ -442,11 +453,14 @@ def test_upsert_guards_and_append_only_cells(spark, enriched, tmp_path):
     assert tbl.read_table(spark, root).count() == enriched.count() + 1
 
 
+_JOB_GROUPS = itertools.count()
+
+
 def _job_count(spark, fn):
     """(fn(), number of Spark jobs it ran) — counted from the status
     tracker through a job group."""
     sc = spark.sparkContext
-    group = f"job-count-{os.getpid()}-{id(fn)}"
+    group = f"job-count-{os.getpid()}-{next(_JOB_GROUPS)}"
     sc.setJobGroup(group, "job count")
     try:
         out = fn()
@@ -460,8 +474,6 @@ def test_append_upsert_job_shape_and_footer_counts(spark, enriched, tmp_path):
     aggregate and commit from the new files' footers: a handful of Spark
     jobs each, every cell's n_rows equal to its footer rows, and the kNN
     anchor bound after an upsert equal to a rescan of the snapshot."""
-    import pyarrow.parquet as pq
-
     from open_buildings_spark.operators.knn import corpus_anchor_offset_m
 
     root = str(tmp_path / "tbl")
@@ -581,3 +593,78 @@ def test_s2_table_lifecycle(spark, enriched, tmp_path):
     # compaction keeps the row set
     tbl.compact_cells(spark, root)
     assert tbl.read_table(spark, root).count() == n0 + 1
+
+
+def test_commit_race_second_writer_raises(spark, enriched, tmp_path, monkeypatch):
+    """Two writers build on the same snapshot: the first commit survives
+    with its rows, and the second raises CommitConflict instead of silently
+    replacing the first's manifest."""
+    root = str(tmp_path / "tbl")
+    base = tbl.write_partitioned(
+        enriched.filter(F.hash("doc_id") % 4 != 0), root, max_per_file=500
+    )
+    first = tbl.append_rows(enriched.filter(F.hash("doc_id") % 4 == 0), root)
+    # the second writer read the table before the first one committed
+    monkeypatch.setattr(tbl, "current_manifest", lambda r: base)
+    late = enriched.limit(5).withColumn("doc_id", F.concat(F.lit("x-"), "doc_id"))
+    with pytest.raises(
+        tbl.CommitConflict, match=f"snapshot {first['snapshot_id']} of table {root}"
+    ):
+        tbl.append_rows(late, root)
+    monkeypatch.undo()
+    assert tbl.current_manifest(root) == first
+    assert tbl.read_table(spark, root).count() == enriched.count()
+
+
+def test_commit_point_is_the_manifest_not_the_version_hint(spark, enriched, tmp_path):
+    """A writer that dies after publishing v{N+1}.json but before moving
+    VERSION has committed: readers see v{N+1}, and the next append commits
+    v{N+2} instead of colliding with it."""
+    root = str(tmp_path / "tbl")
+    tbl.write_partitioned(
+        enriched.filter(F.hash("doc_id") % 4 != 0), root, max_per_file=500
+    )
+    m2 = tbl.append_rows(enriched.filter(F.hash("doc_id") % 4 == 0), root)
+    with open(os.path.join(root, "metadata", "VERSION"), "w") as f:
+        f.write(f"v{m2['snapshot_id'] - 1}.json")  # the stale hint
+    assert tbl.current_manifest(root) == m2
+    late = enriched.limit(5).withColumn("doc_id", F.concat(F.lit("x-"), "doc_id"))
+    m3 = tbl.append_rows(late, root)
+    assert m3["snapshot_id"] == m2["snapshot_id"] + 1
+    assert tbl.current_manifest(root) == m3
+    assert tbl.read_table(spark, root).count() == enriched.count() + 5
+
+
+def test_commit_stress_exactly_one_writer_wins(tmp_path):
+    """More committing threads than cores, all built on the same base: one
+    publishes the snapshot, every other one gets CommitConflict, and the
+    table reads the winner's manifest."""
+    root = str(tmp_path / "tbl")
+    base = {"keys": [], "partitions": [], "metrics": {}}
+    n = 4 * (os.cpu_count() or 1)
+    barrier = threading.Barrier(n, timeout=30)
+    won, lost = [], []
+
+    def writer(i):
+        m = tbl._next_snapshot(None, root, base, {}, set(), {"writer": i})
+        barrier.wait()
+        try:
+            won.append(tbl._commit_manifest(root, m))
+        except tbl.CommitConflict:
+            lost.append(i)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=writer, args=(i,)) for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(won) == 1 and len(lost) == n - 1
+    assert tbl.current_manifest(root) == won[0]
+    meta = os.listdir(os.path.join(root, "metadata"))
+    assert not [f for f in meta if f.endswith(".tmp")]
