@@ -555,10 +555,13 @@ def _q_partition_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    b = _geo_docs(spark, sf_dir).select("doc_id", "quadkey", "lon", "lat")
-    return knn.knn(spark, b, oracles.knn_queries(), k=oracles.KNN_K).withColumn(
-        "rank", F.col("rank").cast("long")
-    )
+    """One top-k job per query and ring over the enriched docs: cache them
+    once instead of re-parsing per job. kNN returns a local relation, so
+    the cache can go as soon as it returns."""
+    b = _geo_docs(spark, sf_dir).select("doc_id", "lon", "lat").cache()
+    out = knn.knn(spark, b, oracles.knn_queries(), k=oracles.KNN_K)
+    b.unpersist()
+    return out.withColumn("rank", F.col("rank").cast("long"))
 
 
 def _q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:

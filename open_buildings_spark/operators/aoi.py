@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions import quadkey_prefix_filter
 from ..geo import mercator
+from ..session import local_frame
 from ..udfs import make_within_aois
 from .enrich import add_geo_columns, extract_geometry
 
@@ -142,8 +143,7 @@ def aoi_query(
         if country_iso is not None and "country_iso" in df.columns:
             df = df.filter(F.col("country_iso") == country_iso)
         return df
-    spark = df.sparkSession
-    cells_df = spark.createDataFrame(cover, _COVER_CELLS_SCHEMA).drop("aoi_id")
+    cells_df = local_frame(df.sparkSession, cover, _COVER_CELLS_SCHEMA).drop("aoi_id")
     df = add_geo_columns(df, keep_bbox=True, deterministic=False)
     df = df.withColumn("cell", F.substring("quadkey", 1, level))
     # inner cover join is exact-safe for WITHIN: a doc whose home cell

@@ -1,23 +1,31 @@
-"""kNN lookup via quadkey cell-ring expansion (north_star J3; absent in the
-reference, which the engine adds as a first-class operator).
+"""kNN lookup by ring-box filter and per-query top-k (north_star J3;
+absent in the reference, which the engine adds as a first-class operator).
 
-Plan: for each query point, gather candidate buildings from the z12 tiles in
-a growing Chebyshev ring around the query tile (broadcast equi-join on
-quadkey — prunes the scan exactly like the AOI prefix filter), then exact
-haversine + windowed top-k. The ring is grown until every query's kth
-distance is provably smaller than the distance to the ring boundary, so the
-result equals brute force (verified against the DuckDB oracle).
+Plan, per query point and ring by ring (the reference's cheap coarse filter
+then exact refinement, download_buildings.py:245-252):
+  1. filter the source on the lon/lat box of the z12 tiles within a
+     Chebyshev ring of the query tile (one extra lon interval where the box
+     crosses the antimeridian) — parquet pushes the ranges into the scan;
+  2. exact haversine, then ``orderBy(dist, doc_id).limit(k)`` collected in
+     one job (``TakeOrderedAndProject``);
+  3. stop once the kth distance is provably smaller than the distance to
+     the box boundary, else grow that query's ring.
+The result equals brute force (verified against the DuckDB oracle). Many
+query points belong in :func:`knn_join`: one distributed plan, cell-cover
+equi-join plus a per-point top-k.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions import haversine_m
+from ..functions import EARTH_R, haversine_m
 from ..geo import mercator
+from ..session import local_frame
 
 ZOOM = 12
 # conservative meters-per-degree LOWER bounds for the ring-boundary
@@ -43,8 +51,7 @@ def anchor_offset_expr(columns) -> Column:
       centroid. The tile coords come from the quadkey string natively
       (translate '0123'->x/y bit strings, conv base 2). A 5% slack covers
       the corner-vs-edge maximization of the geodesic rectangle. For point
-      corpora this still reports ~a tile diagonal — at z12 a few km, far
-      below any ring margin, so it never costs a growth iteration.
+      corpora this still reports ~a tile diagonal (a few km at z12).
     """
     cols = set(columns)
     if {"minx", "miny", "maxx", "maxy", "lon", "lat"} <= cols:
@@ -78,9 +85,10 @@ def anchor_offset_expr(columns) -> Column:
 
 def corpus_anchor_offset_m(buildings: DataFrame) -> float:
     """Upper bound (meters) on dist(quadkey anchor, ranked point) over the
-    corpus — the safety margin kNN ring growth needs for exactness on
-    footprints whose centroid differs from their bbox midpoint. One native
-    aggregate of :func:`anchor_offset_expr`, no Python."""
+    corpus — how far past a point's own tile the anchor-tile layouts (the
+    table's cells, :func:`knn_join`'s cover) must reach for footprints
+    whose centroid differs from their bbox midpoint. One native aggregate
+    of :func:`anchor_offset_expr`, no Python."""
     row = buildings.agg(F.max(anchor_offset_expr(buildings.columns))).collect()[0]
     return float(row[0] or 0.0)
 
@@ -93,19 +101,51 @@ def _ring_cells(qlon: float, qlat: float, ring: int) -> list[str]:
     ]
 
 
+def _ring_box(qlon: float, qlat: float, ring: int):
+    """((west, south, east, north), lon intervals) of the z12 tiles within
+    Chebyshev ``ring`` of the query tile. The box is unwrapped (west may be
+    below -180, east above 180); the intervals wrap it into [-180, 180],
+    one extra interval per side that crosses the antimeridian."""
+    x, y = mercator.tile(qlon, qlat, ZOOM)
+    west, _, _, north = mercator.tile_bounds(x - ring, y - ring, ZOOM)
+    _, south, east, _ = mercator.tile_bounds(x + ring, y + ring, ZOOM)
+    lons = [(max(west, -180.0), min(east, 180.0))]
+    if west < -180.0:
+        lons.append((west + 360.0, 180.0))
+    if east > 180.0:
+        lons.append((-180.0, east - 360.0))
+    return (west, south, east, north), lons
+
+
 def _boundary_margin_m(qlon: float, qlat: float, ring: int) -> float:
     """Lower bound on distance from the query point to outside the ring."""
-    import math
-
-    x, y = mercator.tile(qlon, qlat, ZOOM)
-    w, s0, e0, n0 = mercator.tile_bounds(x - ring, y - ring, ZOOM)
-    w2, s, e, n = mercator.tile_bounds(x + ring, y + ring, ZOOM)
-    west, east = w, e
-    north, south = n0, s
+    (west, south, east, north), _ = _ring_box(qlon, qlat, ring)
     dlon = min(qlon - west, east - qlon)
     dlat = min(qlat - south, north - qlat)
     coslat = math.cos(math.radians(max(abs(north), abs(south))))
     return max(0.0, min(dlon * _M_PER_DEG_LON_EQ * coslat, dlat * _M_PER_DEG_LAT))
+
+
+def _pad_tiles(box, off_m: float) -> int:
+    """Ring padding, in z12 tiles, that reaches the anchor tile of every doc
+    whose ranked point lies in ``box`` and whose anchor is within ``off_m``
+    meters of it. A tile's side shrinks with cos(lat), so both axes are
+    measured at the box's pole-most latitude widened by ``off_m``; the +1
+    covers points on a tile edge."""
+    _, south, _, north = box
+    dlat = math.degrees(off_m / EARTH_R)  # a great circle spans no more lat
+    edge = max(abs(south), abs(north)) + dlat
+    # hav(d) >= cos(lat1) cos(lat2) hav(dlon) bounds the lon span
+    s = math.sin(off_m / (2.0 * EARTH_R)) / max(math.cos(math.radians(edge)), 1e-12)
+    dlon = 360.0 if s >= 1.0 else math.degrees(2.0 * math.asin(s))
+    # mercator y grows by sec(lat) per degree; tile y clamps at the limit
+    sec = 1.0 / math.cos(math.radians(min(edge, mercator.MERCATOR_LAT_LIMIT)))
+    return int(max(dlon, dlat * sec) * (1 << ZOOM) / 360.0) + 1
+
+
+def _in_box(box, lons) -> Column:
+    in_lon = functools.reduce(Column.__or__, [F.col("lon").between(*iv) for iv in lons])
+    return F.col("lat").between(box[1], box[3]) & in_lon
 
 
 def knn(
@@ -115,137 +155,73 @@ def knn(
     k: int = 5,
     initial_ring: int = 8,
     max_ring: int = 256,
-    anchor_offset_m: float | str = "auto",
     table_root: str | None = None,
 ) -> DataFrame:
     """Exact k nearest buildings (haversine meters) per query point.
 
-    ``buildings``: DataFrame with (doc_id, quadkey, lon, lat) — the enriched
-    docs table. ``queries``: small list of (query_id, lon, lat), broadcast.
-    Returns (query_id, doc_id, rank); ordering ties broken by doc_id.
+    ``buildings``: DataFrame with (doc_id, lon, lat) — the enriched docs
+    table. ``queries``: small list of (query_id, lon, lat). Returns
+    (query_id long, doc_id, rank int); ties broken by doc_id. The result is
+    a local relation built from the collected rows, so reading it runs no
+    Spark job.
+
+    Each query runs one job per ring: filter the source on the ring's
+    lon/lat box, ``orderBy(dist, doc_id).limit(k)``, collect. It is done
+    when it has k rows and the kth distance is below the distance to the
+    box boundary (:func:`_boundary_margin_m`); else its ring grows 4x, up
+    to ``max_ring``. Candidates are selected by the point that is ranked,
+    so the check is exact. For many query points use :func:`knn_join`.
 
     ``initial_ring`` is a pure performance knob (exactness holds at any
-    ring via the boundary-margin check): every grow iteration costs a full
-    job round-trip, so starting wider usually wins — measured 11.7s
-    (ring 2, three iterations) vs 3.5s (ring 8, one) on 1.8M docs. Tune
-    down only for extremely dense cells where candidate volume dominates.
+    ring): every growth step costs one more job, so starting wider usually
+    wins.
 
-    ``table_root``: serving-path mode — ignore ``buildings`` and
-    manifest-prune the scan per ring to the iceberg-lite files overlapping
-    the ring cells. Wins when the table has many cells (planet scale: an
-    AOI-sized kNN touches a handful of files regardless of table size);
-    at small cell counts a cached ``buildings`` DataFrame is faster
-    (pruning can't beat an in-memory table of 10 files).
-
-    ``anchor_offset_m``: upper bound (meters) on the distance between a
-    building's quadkey anchor (bbox midpoint) and its ranked point
-    (centroid). Candidates are gathered by anchor tile but ranked by
-    centroid, so a true neighbor whose anchor sits just outside the ring
-    would otherwise be silently missed; the growth criterion therefore
-    requires kth + anchor_offset_m < ring margin. The default ``"auto"``
-    derives the bound from the corpus itself (one native aggregate,
-    :func:`corpus_anchor_offset_m`) or, in ``table_root`` mode, reads the
-    ``max_anchor_offset_m`` metric the table writer stored in the manifest
-    — exact-by-default for arbitrary footprints. Pass an explicit float
-    (e.g. 0.0 for point corpora) to skip the aggregate.
+    ``table_root``: serving-path mode — ignore ``buildings`` and read only
+    the iceberg-lite files of the ring's cells, padded by the tiles that
+    cover the table's ``max_anchor_offset_m`` (files are laid out by
+    anchor tile; without the stored metric, :func:`corpus_anchor_offset_m`
+    scans the table once), then apply the same box filter. Wins when the
+    table has many cells.
     """
-    anchor_future = None
-    if anchor_offset_m == "auto":
-        if table_root is not None:
-            from ..table.iceberg_lite import current_manifest, read_table
+    if table_root is not None:
+        from ..table.iceberg_lite import current_manifest, read_table, read_table_cells
 
-            m = current_manifest(table_root)
-            stored = (m or {}).get("metrics", {}).get("max_anchor_offset_m")
-            if stored is not None:
-                anchor_offset_m = float(stored)
-            else:
-                # fallback: one column-pruned pass over the table (planet
-                # tables should store the metric at write time instead)
-                anchor_offset_m = corpus_anchor_offset_m(read_table(spark, table_root))
-        else:
-            # the bound is only consumed by the growth check AFTER the
-            # first top-k — run the corpus aggregate as a CONCURRENT job
-            # so its scan back-fills executors behind the candidate
-            # join's stages instead of serializing in front of them
-            from concurrent.futures import ThreadPoolExecutor
-
-            _pool = ThreadPoolExecutor(1)
-            anchor_future = _pool.submit(corpus_anchor_offset_m, buildings)
-            _pool.shutdown(wait=False)
-    ring = initial_ring
-    grew = False
-    while True:
-        cells = []
-        for qid, qlon, qlat in queries:
-            for c in _ring_cells(float(qlon), float(qlat), ring):
-                cells.append((int(qid), float(qlon), float(qlat), c))
-        cells_df = spark.createDataFrame(
-            cells, "query_id long, qlon double, qlat double, quadkey string"
-        )
-        if table_root is not None:
-            # serving path: manifest-prune the scan to files overlapping
-            # THIS ring's cells — an AOI-sized kNN touches a handful of
-            # files regardless of table size (the reference's partitioned
-            # archive gives it the same property for AOI queries)
-            from ..table.iceberg_lite import read_table_cells
-
-            src = read_table_cells(
-                spark, table_root, sorted({c[-1] for c in cells})
-            ).select("doc_id", "quadkey", "lon", "lat")
-        else:
-            src = buildings
-        cand = src.join(F.broadcast(cells_df), "quadkey")
-        dist = haversine_m(F.col("lon"), F.col("lat"), F.col("qlon"), F.col("qlat"))
-        scored = cand.withColumn("dist_m", dist)
-        # two-stage salted top-k: a plain Window.partitionBy(query_id) would
-        # funnel every candidate of a query into ONE reducer (queries are
-        # few, candidate sets can be huge in dense cells). Stage 1 takes a
-        # local top-k per (query, salt) shard; stage 2 merges k*SALTS rows.
-        SALTS = 16
-        salted = scored.withColumn(
-            "salt", F.pmod(F.hash(F.col("doc_id")), F.lit(SALTS))
-        )
-        w1 = Window.partitionBy("query_id", "salt").orderBy(
-            F.col("dist_m").asc(), F.col("doc_id").asc()
-        )
-        local = (
-            salted.withColumn("r1", F.row_number().over(w1))
-            .filter(F.col("r1") <= k)
-            .drop("r1", "salt")
-        )
-        w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc(), F.col("doc_id").asc())
-        topk = (
-            local.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "doc_id", "rank", "dist_m")
-        )
-        # exactness check: kth distance must beat the ring boundary for
-        # every query that could still gain candidates from outside
-        kth = {
-            r["query_id"]: (r["cnt"], r["kth"])
-            for r in topk.groupBy("query_id")
-            .agg(F.count("*").alias("cnt"), F.max("dist_m").alias("kth"))
-            .collect()
-        }
-        if anchor_future is not None:
-            anchor_offset_m = anchor_future.result()
-            anchor_future = None
-        ok = True
-        for qid, qlon, qlat in queries:
-            cnt, kd = kth.get(qid, (0, None))
+        off = (current_manifest(table_root) or {}).get("metrics", {}).get("max_anchor_offset_m")
+        if off is None:
+            off = corpus_anchor_offset_m(read_table(spark, table_root))
+    src = buildings
+    rows = []
+    for qid, qlon, qlat in queries:
+        qlon, qlat = float(qlon), float(qlat)
+        dist = haversine_m(F.col("lon"), F.col("lat"), F.lit(qlon), F.lit(qlat))
+        ring = initial_ring
+        while True:
+            box, lons = _ring_box(qlon, qlat, ring)
+            if table_root is not None:
+                reach = ring + _pad_tiles(box, float(off))
+                # a reach past half the tile columns lists millions of cells
+                src = (
+                    read_table_cells(spark, table_root, _ring_cells(qlon, qlat, reach))
+                    if reach < 1 << (ZOOM - 1)
+                    else read_table(spark, table_root)
+                )
+            top = (
+                src.filter(_in_box(box, lons))
+                .select("doc_id", dist.alias("dist_m"))
+                .orderBy("dist_m", "doc_id")
+                .limit(k)
+                .collect()
+            )
+            kth = top[-1]["dist_m"] if top else 0.0
             margin = _boundary_margin_m(qlon, qlat, ring)
-            if cnt < k or (kd is not None and kd + anchor_offset_m >= margin):
-                ok = False
+            if (len(top) == k and kth < margin) or ring >= max_ring:
                 break
-        if ok or ring >= max_ring:
-            return topk.drop("dist_m")
-        ring *= 4
-        if not grew and buildings is not None and not buildings.storageLevel.useMemory:
-            # cache lazily, only once growth proves the corpus will be
-            # re-scanned — the common single-iteration call never pays the
-            # cache materialization
-            buildings = buildings.cache()
-            grew = True
+            ring *= 4
+        rows += [(int(qid), r["doc_id"], i) for i, r in enumerate(top, 1)]
+    if src is None:  # table mode with no queries
+        src = read_table(spark, table_root)
+    doc_type = src.schema["doc_id"].dataType.simpleString()
+    return local_frame(spark, rows, f"query_id long, doc_id {doc_type}, rank int")
 
 
 # ---------------------------------------------------------------------------
@@ -282,7 +258,6 @@ def knn_join(
     radius_m: float = 3000.0,
     point_id: str = "place_id",
     anchor_offset_m: float | str = "auto",
-    salts: int = 16,
 ) -> DataFrame:
     """Distributed radius-bounded kNN JOIN: for EVERY row of ``points`` the
     ``k`` nearest rows of ``docs`` (haversine meters, centroid-ranked) within
@@ -300,9 +275,12 @@ def knn_join(
          ceil(2r/tile)^2 (~4 cells at r=3 km).
       2. hash shuffle equi-join cells x docs on the z12 quadkey (shuffle_hash
          hint: no sort, no broadcast; AQE splits skewed megacity cells).
-      3. native haversine + radius filter, then the same two-stage salted
-         top-k as :func:`knn`, partitioned by point id — a dense cell never
-         funnels one point's candidates into a single reducer.
+      3. native haversine + radius filter, then a ``row_number`` top-k
+         per point id. Spark plans it as ``WindowGroupLimit`` Partial below
+         the point-id exchange and Final above it, so a dense cell never
+         funnels one point's candidates into a single reducer. Spark drops
+         the partial limit when ``k`` exceeds
+         ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000).
 
     Exactness: a doc whose centroid lies within ``radius_m`` has its quadkey
     anchor within radius_m + anchor_offset_m (``"auto"`` = one corpus
@@ -314,12 +292,8 @@ def knn_join(
     ``points`` needs (point_id, lon, lat); ``docs`` needs
     (doc_id, quadkey[z12], lon, lat). Returns (point_id, doc_id, rank).
     """
-    keep = [
-        c
-        for c in ("doc_id", "quadkey", "lon", "lat", "minx", "miny", "maxx", "maxy")
-        if c in docs.columns
-    ]
-    docs = docs.select(*keep)
+    keep = ("doc_id", "quadkey", "lon", "lat", "minx", "miny", "maxx", "maxy")
+    docs = docs.select(*[c for c in keep if c in docs.columns])
     if anchor_offset_m == "auto":
         if docs.storageLevel.useMemory is False:
             # the auto-offset aggregate and the join would otherwise each
@@ -341,7 +315,7 @@ def knn_join(
         F.col("lon").alias("_plon"),
         F.col("lat").alias("_plat"),
     )
-    n_tiles = 1 << ZOOM
+    n_tiles, lim = 1 << ZOOM, mercator.MERCATOR_LAT_LIMIT
     p = (
         p.withColumn("_x0", _tile_x_col(F.col("_plon") - dlon, ZOOM))
         # cap the x span at one full ring so a degenerate margin (huge
@@ -357,24 +331,8 @@ def knn_join(
         # math: past 90 deg, tan() flips sign and _y0 lands at n-1 while
         # _y1 is 0 — Spark's sequence(4095, 0) then DESCENDS (it is never
         # empty), exploding one polar point into a full 4096-row tile column
-        .withColumn(
-            "_y0",
-            _tile_y_col(
-                F.least(
-                    F.col("_plat") + dlat, F.lit(mercator.MERCATOR_LAT_LIMIT)
-                ),
-                ZOOM,
-            ),
-        )
-        .withColumn(
-            "_y1",
-            _tile_y_col(
-                F.greatest(
-                    F.col("_plat") - dlat, F.lit(-mercator.MERCATOR_LAT_LIMIT)
-                ),
-                ZOOM,
-            ),
-        )
+        .withColumn("_y0", _tile_y_col(F.least(F.col("_plat") + dlat, F.lit(lim)), ZOOM))
+        .withColumn("_y1", _tile_y_col(F.greatest(F.col("_plat") - dlat, F.lit(-lim)), ZOOM))
     )
     cells = (
         p.withColumn("_ctx_raw", F.explode(F.sequence("_x0", "_x1")))
@@ -388,17 +346,9 @@ def knn_join(
     cand = d.join(cells.hint("shuffle_hash"), "quadkey")
     dist = haversine_m(F.col("lon"), F.col("lat"), F.col("_plon"), F.col("_plat"))
     scored = cand.withColumn("_dist", dist).filter(F.col("_dist") <= radius_m)
-    w1 = Window.partitionBy("_pid", "_salt").orderBy(
-        F.col("_dist").asc(), F.col("doc_id").asc()
-    )
-    local = (
-        scored.withColumn("_salt", F.pmod(F.hash(F.col("doc_id")), F.lit(salts)))
-        .withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= k)
-    )
     w = Window.partitionBy("_pid").orderBy(F.col("_dist").asc(), F.col("doc_id").asc())
     return (
-        local.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(F.col("_pid").alias(point_id), "doc_id", "rank")
     )

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..geo import kernels, mercator
 from ..geo.wkt import rings_batch
+from ..session import local_frame
 from ..udfs import (
     aoi_rings,
     make_aoi_cover,
@@ -256,9 +257,8 @@ def aoi_join(
     Needs doc bbox columns (minx..maxy): raw docs get them from the same
     single enrichment parse pass; pre-enriched tables without stored
     bbox columns take the exact path for every candidate."""
-    spark = docs.sparkSession
-    cells_df = spark.createDataFrame(
-        classified_cover_cells(aois, cover_level), _COVER_CELLS_SCHEMA
+    cells_df = local_frame(
+        docs.sparkSession, classified_cover_cells(aois, cover_level), _COVER_CELLS_SCHEMA
     )
 
     had_bbox = {"minx", "miny", "maxx", "maxy"} <= set(docs.columns)

@@ -13,7 +13,8 @@ from __future__ import annotations
 import os
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import _parse_datatype_string
 
 _DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
@@ -71,3 +72,15 @@ def get_spark(
     if ship_package:
         spark.sparkContext.addPyFile(package_zip())
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """Frame of local Python ``rows`` (tuples in ``schema`` order). Built
+    from pandas, it plans as a local relation: reading or broadcasting it
+    runs no Spark job, where a frame made from a row list is a parallelized
+    RDD that costs one on every action."""
+    import pandas as pd
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)

@@ -43,6 +43,8 @@ from pyspark.sql.types import (
     _parse_datatype_string,
 )
 
+from ..session import local_frame
+
 
 def _meta_dir(root: str) -> str:
     return os.path.join(root, "metadata")
@@ -308,7 +310,7 @@ def write_partitioned(
         # plan entry and drop out. Plan size stays out of codegen — the
         # previous per-cell startswith/when chains were O(#cells) Catalyst
         # expressions, fatal at planet scale (~10^5-10^6 leaves).
-        sub = tag_cells(df, spark.createDataFrame(list(counts), plan_schema), keys)
+        sub = tag_cells(df, local_frame(spark, list(counts), plan_schema), keys)
         # snapshot immutability: files are only ever ADDED (append mode +
         # job-unique part names); the manifest's per-cell file list is the
         # diff of the cell dir across the job, so files from an earlier
@@ -451,19 +453,6 @@ def _next_snapshot(
     }
 
 
-def _broadcast_rows(spark: SparkSession, rows: list, schema) -> DataFrame:
-    """Broadcast frame of driver-side rows. Built from pandas, it plans as
-    a local relation: broadcasting it costs a fraction of a frame made
-    from a row list, which Spark materializes as a parallelized RDD job."""
-    import pandas as pd
-
-    if isinstance(schema, str):
-        schema = _parse_datatype_string(schema)
-    return F.broadcast(
-        spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
-    )
-
-
 def _check_batch(df: DataFrame, m: dict, keys: list[str], what: str) -> None:
     """A write batch may carry only the table's columns and must carry its
     partition key columns, string-typed."""
@@ -534,8 +523,8 @@ def _route_batch(df: DataFrame, m: dict, merge_key: str | None = None) -> dict:
         )
         route.append((*kv, qk, cell))
         counts[(*kv, cell)] = counts.get((*kv, cell), 0) + g["_n"]
-    route_df = _broadcast_rows(
-        df.sparkSession, route, _plan_schema([*keys, "_qk12"])
+    route_df = F.broadcast(
+        local_frame(df.sparkSession, route, _plan_schema([*keys, "_qk12"]))
     )
     out = {
         "tagged": df.withColumn("_qk12", qk12)
@@ -690,7 +679,9 @@ def _write_cells_salted(
     counts = counts or {}
     over = [(*ck, -(-n // cap)) for ck, n in counts.items() if cap and n > cap]
     if over:
-        shards = _broadcast_rows(spark, over, _plan_schema(keys, ", _shards int"))
+        shards = F.broadcast(
+            local_frame(spark, over, _plan_schema(keys, ", _shards int"))
+        )
         salt = F.when(
             F.col("_shards").isNotNull(),
             F.pmod(F.hash(F.col("doc_id")), F.col("_shards")),
@@ -806,11 +797,8 @@ def upsert_rows(
             "written)"
         )
     new_counts = r["counts"]
-    keys_df = _broadcast_rows(
-        spark,
-        [(k,) for k in r["keys"]],
-        StructType([StructField(key, df.schema[key].dataType)]),
-    )
+    key_schema = StructType([StructField(key, df.schema[key].dataType)])
+    keys_df = F.broadcast(local_frame(spark, [(k,) for k in r["keys"]], key_schema))
     # old versions can live under ANY partition (a row may change its
     # partition key value — e.g. a doc moving country), so one
     # column-pruned scan of the whole table, semi-joined to the broadcast

@@ -321,3 +321,28 @@ def test_aoi_refine_python_eval_counts(spark, docs, tmp_path):
     assert evals(spatial_join.aoi_join(docs, aois)) == 2
     assert evals(aoi_op.aoi_query(table, datagen.city_aoi())) == 1
     assert evals(spatial_join.aoi_join(table, aois)) == 1
+
+
+def test_knn_join_top_k_limits_before_its_exchange(spark):
+    """knn_join's per-point row_number top-k plans a Partial
+    WindowGroupLimit below the point-id exchange and the Final one above
+    it: each map task ships at most k rows per point, however dense the
+    cell."""
+    from open_buildings_spark.operators import knn
+
+    docs = spark.createDataFrame(
+        [(1, "0" * 12, 0.0, 0.0)], "doc_id long, quadkey string, lon double, lat double"
+    )
+    pts = spark.createDataFrame([(1, 0.0, 0.0)], "place_id long, lon double, lat double")
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        knn.knn_join(pts, docs, k=3, anchor_offset_m=0.0).explain()
+    lines = buf.getvalue().splitlines()
+
+    def first(pred):
+        return next(i for i, line in enumerate(lines) if pred(line))
+
+    final = first(lambda l: "WindowGroupLimit" in l and l.rstrip().endswith("Final"))
+    exchange = first(lambda l: "Exchange hashpartitioning(_pid" in l)
+    partial = first(lambda l: "WindowGroupLimit" in l and l.rstrip().endswith("Partial"))
+    assert final < exchange < partial

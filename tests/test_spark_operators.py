@@ -265,19 +265,18 @@ def test_multipolygon_aoi_query(spark, docs):
 
 
 def test_knn_anchor_offset_allowance(spark, docs, buildings_pdf):
-    """anchor_offset_m widens the exactness criterion (kth + offset < ring
-    margin) for corpora whose quadkey anchor diverges from the ranked
-    centroid; results stay identical to the default here because the
-    synthetic shapes have anchor == centroid."""
+    """Ring growth from ``initial_ring=1`` (``max_ring=64``) ends on the
+    same neighbors as the default start: the exactness check needs no
+    anchor-offset allowance, because candidates are filtered by the point
+    that is ranked."""
     g = enrich.add_geo_columns(docs, drop_nongeo=True)
     b = g.select("doc_id", "quadkey", "lon", "lat").cache()
     queries = [(0, buildings_pdf.lon.iloc[0] + 0.01, buildings_pdf.lat.iloc[0] + 0.01)]
     base = knn.knn(spark, b, queries, k=5).orderBy("rank").toPandas()
-    # a 500 m allowance forces at least one extra ring growth from ring=1
-    wide = knn.knn(
-        spark, b, queries, k=5, initial_ring=1, max_ring=64, anchor_offset_m=500.0
+    grown = knn.knn(
+        spark, b, queries, k=5, initial_ring=1, max_ring=64
     ).orderBy("rank").toPandas()
-    assert base.doc_id.tolist() == wide.doc_id.tolist()
+    assert base.doc_id.tolist() == grown.doc_id.tolist()
 
 
 def test_big_aoi_join_matches_broadcast_path(spark, docs):
@@ -345,13 +344,13 @@ def test_big_aoi_join_matches_broadcast_path(spark, docs):
     assert 0 < n_donut < n_full
 
 
-def test_knn_auto_offset_exact_on_asymmetric_footprints(spark):
+def test_knn_auto_offset_exact_on_asymmetric_footprints(spark, tmp_path):
     """Corpus where centroid != bbox midpoint: a flag-shaped footprint has
     its area centroid ~50 m from the query but its quadkey anchor (bbox
-    midpoint) ~1.7 tiles away. With anchor_offset_m=0 and a small initial
-    ring the termination check wrongly passes and the neighbor is silently
-    dropped; the 'auto' default derives the corpus bound and returns the
-    brute-force result."""
+    midpoint) ~1.7 tiles away. From a one-tile ring, kNN returns the
+    brute-force result both over a frame (candidates are filtered by
+    centroid) and over a table whose cap puts the flag in a leaf of its own
+    outside that ring (the read is padded by the stored anchor bound)."""
     import numpy as np
 
     from open_buildings_spark.geo import mercator
@@ -396,14 +395,21 @@ def test_knn_auto_offset_exact_on_asymmetric_footprints(spark):
     assert "flag" in want
 
     queries = [(0, qx, qy)]
-    missed = knn.knn(
-        spark, b, queries, k=5, initial_ring=1, anchor_offset_m=0.0
-    ).orderBy("rank").toPandas()
-    assert "flag" not in missed.doc_id.tolist()  # the silent miss
-    exact = knn.knn(
-        spark, b, queries, k=5, initial_ring=1, anchor_offset_m="auto"
-    ).orderBy("rank").toPandas()
+    exact = knn.knn(spark, b, queries, k=5, initial_ring=1).orderBy("rank").toPandas()
     assert exact.doc_id.tolist() == want
+
+    from open_buildings_spark.table import iceberg_lite as tbl
+
+    root = str(tmp_path / "flag_tbl")
+    m = tbl.write_partitioned(g, root, max_per_file=2)
+    flag_leaf = [p["cell"] for p in m["partitions"] if flag_qk.startswith(p["cell"])]
+    ring1 = knn._ring_cells(qx, qy, 1)
+    # the flag's file lies outside the one-tile ring: only the pad reads it
+    assert not any(c.startswith(flag_leaf[0]) for c in ring1)
+    served = knn.knn(
+        spark, None, queries, k=5, initial_ring=1, table_root=root
+    ).orderBy("rank").toPandas()
+    assert served.doc_id.tolist() == want
 
 
 def test_hier_histogram_bounds_driver_collect(spark):
@@ -833,6 +839,20 @@ def test_knn_join_wraps_antimeridian(spark):
         ).collect()
     }
     assert got == {"d-east", "d-west"}  # west neighbor found via wrap
+
+
+def test_knn_wraps_antimeridian(spark):
+    """A query at lon=179.99 finds the doc at lon=-179.995 (~1.1 km away
+    across the antimeridian) at its first ring, and the one at lon=-170
+    after growth."""
+    docs = spark.createDataFrame(
+        [("d-east", 179.995, 0.0), ("d-west", -179.995, 0.0), ("d-far", -170.0, 0.0)],
+        "doc_id string, lon double, lat double",
+    )
+    got = knn.knn(spark, docs, [(1, 179.99, 0.0)], k=2).orderBy("rank").collect()
+    assert [r["doc_id"] for r in got] == ["d-east", "d-west"]
+    got = knn.knn(spark, docs, [(1, 179.99, 0.0)], k=3).orderBy("rank").collect()
+    assert [r["doc_id"] for r in got] == ["d-east", "d-west", "d-far"]
 
 
 def test_first_vertex_prefilter_tolerates_whitespace(spark):

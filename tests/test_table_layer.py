@@ -203,6 +203,22 @@ def test_knn_manifest_pruned_matches_full_scan(spark, enriched, tmp_path):
     assert 0 < n_pruned < n_full
 
 
+def test_knn_runs_one_job_per_query(spark, enriched, tmp_path):
+    """A kNN query whose ring does not grow runs one Spark job over a
+    parquet frame (box filter + top-k collect), and its result is a local
+    relation: reading it runs none."""
+    from open_buildings_spark import oracles
+    from open_buildings_spark.operators import knn
+
+    path = str(tmp_path / "docs_pq")
+    enriched.select("doc_id", "quadkey", "lon", "lat").write.parquet(path)
+    b = spark.read.parquet(path)
+    out, jobs = _job_count(spark, lambda: knn.knn(spark, b, oracles.knn_queries()[:1], k=5))
+    assert jobs == 1
+    rows, jobs = _job_count(spark, lambda: out.select("doc_id").collect())
+    assert jobs == 0 and len(rows) == 5
+
+
 def test_compaction_time_travel_and_expiry(spark, enriched, tmp_path):
     """Compaction commits a NEW snapshot over NEW files: the previous
     snapshot still reads its own (pre-compaction) view, read counts are
@@ -296,8 +312,8 @@ def test_compaction_noop_and_keyed_guard(spark, enriched, tmp_path):
 
 
 def test_manifest_stores_anchor_offset_metric(spark, docs, tmp_path):
-    """write_partitioned stores max_anchor_offset_m; serving-path kNN
-    ('auto') consumes it from the manifest without rescanning the table."""
+    """write_partitioned stores max_anchor_offset_m, which serving-path
+    kNN reads from the manifest to pad its ring without rescanning."""
     from open_buildings_spark.operators import knn as knn_op
 
     root = str(tmp_path / "tbl_off")
